@@ -481,14 +481,18 @@ def _fit_payload(total: float, timings: dict[str, float], sf: object) -> str:
         omitted += 1
 
 
-def _write_full_dict(total: float, timings: dict[str, float], sf: object) -> None:
+def _write_full_dict(
+    total: float, timings: dict[str, float], sf: object, cpus: int
+) -> None:
     """Persist the COMPLETE per-query dict beside the repo's BENCH_r*.json.
 
     The driver's stdout record keeps only a <=1900-char JSON line, so the
     cheapest per-query timings are omitted there (``queries_omitted``) and a
     regression in an omitted query would be invisible across rounds. This
-    writes ``BENCH_full_r{N}.json`` (N = 1 + the highest driver-committed
-    BENCH_r*.json round, i.e. the round in progress; override with
+    writes ``BENCH_full_r{N}_c{cpus}.json`` (N = 1 + the highest
+    committed BENCH_r*.json round, i.e. the round in progress, and cpus =
+    the session's parallelism, so a scaling run at another core count
+    never takes the round's slot; override with
     $SPARK_GRAFT_BENCH_FULL) so round-over-round comparisons always have
     every timing. Best-effort: a read-only checkout must not break the
     one-JSON-line driver contract."""
@@ -509,11 +513,13 @@ def _write_full_dict(total: float, timings: dict[str, float], sf: object) -> Non
                         rounds.append(int(f[len("BENCH_r"):-len(".json")]))
                     except ValueError:
                         pass
-            out = os.path.join(repo, f"BENCH_full_r{max(rounds) + 1:02d}.json")
+            out = os.path.join(
+                repo, f"BENCH_full_r{max(rounds) + 1:02d}_c{cpus}.json"
+            )
         with open(out, "w") as fh:
             json.dump(
                 {"metric": "headline_total_sec", "value": total, "unit": "sec",
-                 "sf": sf, "queries": timings},
+                 "sf": sf, "cpus": cpus, "queries": timings},
                 fh, indent=1, sort_keys=True,
             )
             fh.write("\n")
@@ -606,7 +612,7 @@ def main() -> int:
     # Full dict to stderr (prefixed so no driver-side parser grabs it).
     print(f"bench full: {json.dumps(timings, separators=(',', ':'))}", file=sys.stderr)
     sys.stderr.flush()
-    _write_full_dict(total, timings, sf)
+    _write_full_dict(total, timings, sf, spark.sparkContext.defaultParallelism)
     line = _fit_payload(total, timings, sf)
     # Leading newline: guarantees the JSON starts a fresh line even if
     # some earlier write left the stream mid-line.

@@ -277,16 +277,26 @@ def upsert_by_key(
     """S6 `INSERT OR REPLACE` semantics: one row per key, last-write-wins.
 
     The reference keeps the *last* duplicate within a load
-    (/root/reference/src/core/db_manager.py:135). With an explicit
-    ``order_col`` (one column or a list) we keep the lexicographic max per
-    key — deterministic when the order columns are unique per key, or when
-    they cover every output column (tied rows are then identical anyway).
-    Without one, ``dropDuplicates`` keeps an arbitrary row (documented
-    deviation — input order is not a meaningful concept for a distributed
-    scan).
+    (reference ``src/core/db_manager.py:135``). Every call runs the same
+    plan: ``row_number`` over a window partitioned by ``key``, keeping
+    rank 1, so the survivor is always one whole input row. With an
+    explicit ``order_col`` (one column or a list) the window orders by it
+    descending and we keep the lexicographic max per key — deterministic
+    when the order columns are unique per key, or when they cover every
+    output column (tied rows are then identical anyway). Without one the
+    window orders by the key itself, so every row of a key ties and rank 1
+    is an arbitrary one of them (documented deviation — input order is not
+    a meaningful concept for a distributed scan).
+
+    The key-ordered window replaces ``dropDuplicates``, whose ``first()``
+    over string columns has no mutable hash-aggregate buffer: Spark planned
+    it as interpreted sort-aggregates on both sides of the shuffle, building
+    one ``first()`` buffer per column. The window plan sorts the same rows
+    but keeps rank 1 with a row counter (Spark's group limit also drops a
+    key's duplicates before the exchange) and moves whole rows.
     """
     if order_col is None:
-        return df.dropDuplicates([key])
+        order_col = key
     order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
     w = Window.partitionBy(key).orderBy(*[F.col(c).desc() for c in order_cols])
     return (
@@ -329,27 +339,41 @@ def get_table_stats(df: DataFrame) -> dict:
     }
 
 
-def validate_data_integrity(df: DataFrame) -> dict:
-    """A6 conditional counts — the reference's 7 validation queries
-    (/root/reference/src/core/db_manager.py:326-346) in ONE scan via
-    sum(when(...)) map-side combine."""
-    checks = {
-        "null_transaction_id": F.col("transaction_id").isNull(),
-        "null_user_id": F.col("user_id").isNull(),
-        "null_amount": F.col("amount").isNull(),
-        "null_status": F.col("status").isNull(),
-        "null_processed_at": F.col("processed_at").isNull(),
-        "negative_amounts": F.col("amount") < 0,
-        "cancelled_status": F.lower(F.col("status")) == "cancelled",
-    }
-    row = df.agg(
-        *[
-            F.sum(F.when(cond, 1).otherwise(0)).alias(name)
-            for name, cond in checks.items()
-        ]
-    ).first()
-    issues = {name: row[name] for name in checks if row[name]}
+# The written table's invariants: check name -> builder of its
+# violating-row predicate — the reference's 7 validation queries
+# (reference ``src/core/db_manager.py:326-346``). The A5 final-data
+# checks (``transform.FINAL_CHECKS``) are three of these under the
+# reference's other names.
+INTEGRITY_CHECKS = {
+    "null_transaction_id": lambda: F.col("transaction_id").isNull(),
+    "null_user_id": lambda: F.col("user_id").isNull(),
+    "null_amount": lambda: F.col("amount").isNull(),
+    "null_status": lambda: F.col("status").isNull(),
+    "null_processed_at": lambda: F.col("processed_at").isNull(),
+    "negative_amounts": lambda: F.col("amount") < 0,
+    "cancelled_status": lambda: F.lower(F.col("status")) == "cancelled",
+}
+
+
+def violation_counts(names) -> list:
+    """``sum(when(...))`` aggregate columns counting the violating rows of
+    the named ``INTEGRITY_CHECKS``, each aliased by its check name."""
+    return [
+        F.sum(F.when(INTEGRITY_CHECKS[n](), 1).otherwise(0)).alias(n)
+        for n in names
+    ]
+
+
+def integrity_report(row) -> dict:
+    """The A6 report from an aggregate row holding every check's count."""
+    issues = {name: row[name] for name in INTEGRITY_CHECKS if row[name]}
     return {"is_valid": not issues, "issues": issues}
+
+
+def validate_data_integrity(df: DataFrame) -> dict:
+    """A6 conditional counts — all 7 checks in ONE scan via sum(when(...))
+    map-side combine."""
+    return integrity_report(df.agg(*violation_counts(INTEGRITY_CHECKS)).first())
 
 
 def write_table_partitioned(

@@ -26,17 +26,25 @@ from __future__ import annotations
 import argparse
 import sys
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+# run_pipeline validates through validate_table, but validate_final_data
+# and validate_data_integrity stay imported: perfbench's traced runs look
+# these module-level names up to instrument them.
 from .io import (
     CORRUPT_COL,
+    INTEGRITY_CHECKS,
+    integrity_report,
     read_transactions_csv,
     upsert_by_key,
     validate_data_integrity,
+    violation_counts,
     write_table,
 )
 from .logging_util import get_logger, setup_logging
 from .transform import (
+    final_report,
     observed_pipeline,
     processing_stats,
     transform,
@@ -44,6 +52,16 @@ from .transform import (
 )
 
 logger = get_logger(__name__)
+
+
+def validate_table(df: DataFrame) -> tuple[dict, dict]:
+    """``(validate_final_data(df), validate_data_integrity(df))`` from ONE
+    aggregate scan: the row count and every ``io.INTEGRITY_CHECKS``
+    predicate, of which the A5 checks are a subset."""
+    row = df.agg(
+        *violation_counts(INTEGRITY_CHECKS), F.count("*").alias("rows")
+    ).first()
+    return final_report(row), integrity_report(row)
 
 
 def run_pipeline(
@@ -78,16 +96,18 @@ def run_pipeline(
 
     # Post-write checks read the written table (what a user would query),
     # not the in-memory plan — the same observability point as the
-    # reference's SQLite-side validators.
-    loaded = spark.read.parquet(output_path)
+    # reference's SQLite-side validators. One read-back pass: the written
+    # schema is passed in (no footer-inference job) and the row count plus
+    # both validators' predicates are one aggregate scan. The parquet
+    # source reads every column of that schema as nullable, so the null
+    # checks are evaluated on the written values, never folded away.
+    loaded = spark.read.schema(out.schema).parquet(output_path)
+    final, integrity = validate_table(loaded)
     if dedupe_key:
         # upsert may drop duplicate keys after the observed transform;
         # report the written row count (the reference's processed_rows)
-        processed = loaded.count()
-        stats["processed_rows"] = processed
-        stats["rows_removed"] = stats["original_rows"] - processed
-    final = validate_final_data(loaded)
-    integrity = validate_data_integrity(loaded)
+        stats["processed_rows"] = final["rows"]
+        stats["rows_removed"] = stats["original_rows"] - final["rows"]
     report = {
         "stats": stats,
         "final_validation": final,

@@ -78,75 +78,64 @@ _MODULES = [
 # composition tripwires red before the next rotation (ADVICE r9 #1).
 # Bump it with every rotation; a staleness test pins it to within one
 # round of the newest verdict file.
-WINDOW_GRADED_AS_OF = 14
+WINDOW_GRADED_AS_OF = 16
 
 GRADED_PRIORITY = [
-    # ---- round-15 window (VERDICT r14 ask #2): the flagship re-grade,
-    # then ALL 46 never-graded oracled entries (the full as-of-r14
-    # backlog — grading them closes cumulative coverage at 600/600
-    # oracled entries externally verified at least once), then the
-    # round's one standing-red re-grade (etl_idempotent_reingest_audit,
-    # hash-red in r14, checksum canon hardened this round — a mandatory
-    # fix verification, not a regular staleness re-grade), then the 2
-    # stalest regular re-grades (setop_union_all_counts and
-    # scalar_array_functions, both last graded r2, doubling as the
-    # setops/scalars family reps). The family-representation rule
-    # yields for approx this round (gen_window.py policy #4: reps are
-    # forced by evicting REGULAR re-grades, and with 46 never-graded +
-    # 1 red-row slot only 2 regular slots exist for 3 rep-less
-    # families; approx's stalest candidate agg_mode_by_group last
-    # graded r5 defers behind the two r2 entries and rotates in next
-    # round).
+    # ---- round-17 window (tools/gen_window.py as of r16): the flagship
+    # re-grade, then all 14 never-graded oracled entries (the full as-of-
+    # r16 backlog), then the 35 stalest regular re-grades (last graded
+    # r2-r5), which also cover every family's representative. No entry
+    # was standing red after r16, so no red-row re-grade is pinned.
     "etl_transform_parity",
-    "etl_embedded_newline_csv",
-    "etl_duplicate_header_detect",
-    "etl_locale_decimal_normalize",
-    "dq_primary_key_gap_census",
-    "dq_categorical_domain_drift",
-    "temporal_order_interarrival_profile",
-    "temporal_month_end_effect",
-    "agg_coefficient_quartile_variation",
-    "agg_tukey_trimean",
-    "agg_lag_sign_agreement",
-    "agg_cochran_armitage_trend",
-    "agg_turning_point_test",
-    "agg_mad_zscore_outlier_census",
-    "agg_sen_slope_confidence_band",
-    "agg_cox_stuart_trend",
-    "agg_decile_ratio_spread",
-    "window_elder_ray",
-    "window_pivot_points",
-    "window_chaikin_volatility",
-    "window_cci",
-    "window_robust_frame_zscore",
-    "window_coppock_curve",
-    "window_median_crossing_runs",
-    "events_absence_streaks",
-    "events_value_pareto_share",
-    "events_interevent_cv2",
-    "events_peak_hour_stability",
-    "events_type_cooccurrence_matrix",
-    "events_daily_velocity_acceleration",
-    "sample_dedup_aware_ess",
-    "streaming_watermark_delay_sweep",
-    "text_sentence_length_profile",
-    "text_unigram_simpson_diversity",
-    "text_char_class_mix",
-    "text_doclength_lorenz_deciles",
-    "text_topk_coverage_curve",
-    "graph_two_hop_reach",
-    "dedup_containment_disagreement",
-    "dedup_anchor_prefilter_audit",
-    "sim_hubness_kocc",
-    "sim_pq_subspace_distortion",
-    "sim_threshold_pair_curve",
-    "sim_knn_label_confusion",
-    "sim_ivf_list_balance_audit",
-    "multimodal_resolution_ladder_census",
-    "multimodal_payload_byte_simpson",
-    "etl_idempotent_reingest_audit",
-    "setop_union_all_counts",
-    "scalar_array_functions",
+    "dq_all_null_row_census",
+    "dq_numeric_precision_census",
+    "agg_bartels_rank_vn",
+    "agg_wallis_moore_phase",
+    "agg_blomqvist_beta",
+    "agg_winsorized_variance",
+    "agg_goodman_kruskal_gamma",
+    "agg_somers_d",
+    "window_awesome_oscillator",
+    "window_ease_of_movement",
+    "window_connors_rsi",
+    "events_type_audience_overlap",
+    "text_vocab_containment_matrix",
+    "text_length_quality_correlation",
+    "q19_disjunctive_predicates",
+    "q2_min_cost_per_type",
+    "q4_order_priority_exists",
+    "q6_forecast_revenue",
+    "q7_nation_pair_volume",
+    "scalar_conditional_case",
+    "scalar_date_functions",
+    "scalar_math_functions",
+    "scalar_string_functions",
+    "subquery_scalar_above_avg",
+    "window_distribution_functions",
+    "window_first_last_value",
+    "window_lag_lead_delta",
+    "window_moving_avg_frame",
+    "window_range_frame_sum",
+    "window_rank_variants",
+    "window_topk_orders_per_customer",
+    "dedup_clusters",
+    "dedup_embedding_neardup",
+    "dedup_eval_decontamination",
+    "dedup_exact_groups",
+    "dedup_exact_survivors",
+    "dedup_ngram_jaccard",
+    "grouping_sets_status_priority",
+    "join_left_anti_semi",
+    "multimodal_payload_stats",
+    "q17_small_quantity_revenue",
+    "sample_hash_uniform",
+    "sample_mixture_weighted",
+    "sample_pack_sequences",
+    "setop_except_nations",
+    "sim_norms",
+    "asof_join_with_ttl",
+    "agg_mode_by_group",
+    "streaming_click_attribution",
 ]
 
 

@@ -1589,6 +1589,10 @@ def events_seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 MARKOV_ROUNDS = 12
 MARKOV_SCALE = 1_000_000_000_000
+# events_markov_stationary collect()s the transition matrix and iterates
+# in Python; its rows are bounded by |event-type vocabulary|^2, enforced
+# at this vocabulary size (65,536 rows, 12 rounds of integer arithmetic).
+MARKOV_MAX_TYPES = 256
 
 
 def _markov_oracle() -> str:
@@ -1684,8 +1688,18 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every quantity is a non-negative int, Spark's `div` and Python's
     # `//` agree on non-negative operands, and integer sums are
     # order-independent — so the result is bit-identical to the previous
-    # distributed loop and to the oracle's unrolled integer CTEs.
-    trows = trans.collect()
+    # distributed loop and to the oracle's unrolled integer CTEs. The
+    # vocabulary bound is enforced, not assumed: one row past it is
+    # collected at most, and its presence aborts the query.
+    bound = MARKOV_MAX_TYPES**2
+    trows = trans.limit(bound + 1).collect()
+    if len(trows) > bound:
+        raise ValueError(
+            f"events_markov_stationary: more than {bound} event-type "
+            f"transitions; the in-Python iteration requires the matrix "
+            f"(|event-type vocabulary|^2 rows) to fit "
+            f"MARKOV_MAX_TYPES^2 = {MARKOV_MAX_TYPES}^2"
+        )
     if not trows:
         # empty input: no states, no distribution
         return spark.createDataFrame(

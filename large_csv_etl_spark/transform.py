@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .io import violation_counts
 from .schemas import OUTPUT_COLUMNS, REQUIRED_COLUMNS
 
 
@@ -113,25 +114,29 @@ def transform(df: DataFrame) -> DataFrame:
     return apply_transformations(apply_business_rules(clean(df)))
 
 
+# A5 report key -> the ``io.INTEGRITY_CHECKS`` predicate it counts. The
+# three A5 invariants are A6 checks under the reference's A5 names.
+FINAL_CHECKS = {
+    "negatives": "negative_amounts",
+    "cancelled": "cancelled_status",
+    "null_processed_at": "null_processed_at",
+}
+
+
+def final_report(row) -> dict:
+    """The A5 report from an aggregate row holding ``rows`` and the
+    ``FINAL_CHECKS`` counts."""
+    issues = {k: row[c] for k, c in FINAL_CHECKS.items() if row[c]}
+    return {"is_valid": not issues, "rows": row["rows"], "issues": issues}
+
+
 def validate_final_data(df: DataFrame) -> dict:
     """A5 existence predicates (/root/reference/src/data_processor.py:212-247)
     — all invariants in ONE aggregate scan instead of three .any() passes."""
     row = df.agg(
-        F.sum(F.when(F.col("amount") < 0, 1).otherwise(0)).alias("negatives"),
-        F.sum(F.when(F.lower(F.col("status")) == "cancelled", 1).otherwise(0)).alias(
-            "cancelled"
-        ),
-        F.sum(F.when(F.col("processed_at").isNull(), 1).otherwise(0)).alias(
-            "null_processed_at"
-        ),
-        F.count("*").alias("rows"),
+        *violation_counts(FINAL_CHECKS.values()), F.count("*").alias("rows")
     ).first()
-    issues = {
-        k: row[k]
-        for k in ("negatives", "cancelled", "null_processed_at")
-        if row[k]
-    }
-    return {"is_valid": not issues, "rows": row["rows"], "issues": issues}
+    return final_report(row)
 
 
 def processing_stats(input_df: DataFrame, output_df: DataFrame) -> dict:

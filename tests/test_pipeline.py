@@ -45,6 +45,100 @@ def test_run_pipeline_small(spark, tmp_path):
     assert loaded.count() == 2
     t6 = loaded.filter(F.col("transaction_id") == "T6").first()
     assert t6.amount in (2.68, 9.99)  # exactly one survivor
+    # the survivor is one whole input line: columns are never mixed
+    # across the duplicates
+    assert (t6.amount, t6.timestamp[:10]) in {
+        (2.68, "2025-01-01"),
+        (9.99, "2025-01-02"),
+    }
+
+
+def test_validate_table_matches_both_validators(spark):
+    """The fused one-scan report equals the two public validators key for
+    key, on a table violating every check and on a clean one."""
+    from large_csv_etl_spark.io import validate_data_integrity
+    from large_csv_etl_spark.pipeline import validate_table
+    from large_csv_etl_spark.transform import validate_final_data
+
+    df = spark.createDataFrame(
+        [
+            ("T1", "U1", 10.0, "completed", "p"),
+            ("T2", "U2", -1.0, "pending", "p"),  # negative
+            ("T3", "U3", 5.0, "Cancelled", "p"),  # cancelled
+            ("T4", "U4", 5.0, "failed", None),  # null processed_at
+            (None, None, None, None, "p"),  # null ids, amount, status
+            ("T6", None, -2.0, "CANCELLED", None),
+        ],
+        "transaction_id string, user_id string, amount double,"
+        " status string, processed_at string",
+    )
+    final, integrity = validate_table(df)
+    separate = validate_final_data(df)
+    assert final == separate
+    assert list(final["issues"]) == list(separate["issues"])
+    assert integrity == validate_data_integrity(df)
+    assert final == {
+        "is_valid": False,
+        "rows": 6,
+        "issues": {"negatives": 2, "cancelled": 2, "null_processed_at": 2},
+    }
+    assert integrity == {
+        "is_valid": False,
+        "issues": {
+            "null_transaction_id": 1,
+            "null_user_id": 2,
+            "null_amount": 1,
+            "null_status": 1,
+            "null_processed_at": 2,
+            "negative_amounts": 2,
+            "cancelled_status": 2,
+        },
+    }
+
+    clean = df.filter(F.col("transaction_id") == "T1")
+    fused = validate_table(clean)
+    assert fused == (validate_final_data(clean), validate_data_integrity(clean))
+    assert fused == (
+        {"is_valid": True, "rows": 1, "issues": {}},
+        {"is_valid": True, "issues": {}},
+    )
+
+
+def test_run_pipeline_post_write_reads_back_once(spark, tmp_path, monkeypatch):
+    """After write_table returns, run_pipeline reads the written table
+    back in one pass: at most 2 Spark jobs (the aggregate's map stage and
+    its result) and exactly 1 stage that reads input. The jobs are counted
+    through the status tracker under a job group set when the write
+    returns."""
+    from large_csv_etl_spark import pipeline
+
+    sc = spark.sparkContext
+    group = f"post_write_{tmp_path.name}"
+    write = pipeline.write_table
+
+    def write_then_tag(*args, **kwargs):
+        write(*args, **kwargs)
+        sc.setJobGroup(group, group)
+
+    monkeypatch.setattr(pipeline, "write_table", write_then_tag)
+    csv = tmp_path / "txns.csv"
+    _write_small_csv(csv)
+    try:
+        report = run_pipeline(spark, str(csv), str(tmp_path / "table"))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert report["success"], report
+    assert report["stats"]["processed_rows"] == 2
+
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 2, jobs
+    store = jsc.statusStore()
+    stages = {s for j in jobs for s in tracker.getJobInfo(j).stageIds}
+    scans = [s for s in stages if store.lastStageAttempt(s).inputBytes() > 0]
+    assert len(scans) == 1, (jobs, stages)
 
 
 def test_cli_exit_code_and_output(spark, tmp_path, capsys):

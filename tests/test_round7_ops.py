@@ -1268,3 +1268,28 @@ def test_largest_remainder_sums_to_exactly_100(spark):
     assert sum(r.allocated_pct for r in rows) == 100
     for r in rows:
         assert r.allocated_pct - r.floor_pct in (0, 1)
+
+
+def test_markov_stationary_enforces_vocabulary_bound(spark, monkeypatch):
+    """The transition matrix is collected only while it fits
+    MARKOV_MAX_TYPES^2 rows: a chain over more event types than the cap
+    allows raises instead of collecting. Five types cycling A->B->C->D->E
+    give 5 distinct transitions, over a cap of 2 types (4 rows)."""
+    import pytest
+
+    from large_csv_etl_spark.queries import events
+    from large_csv_etl_spark.queries.events import QUERIES as EQ
+
+    t0 = dt.datetime(2024, 1, 1)
+    rows = [
+        (i, t0 + dt.timedelta(minutes=i), 1, "ABCDE"[i % 5], 1.0, "{}")
+        for i in range(20)
+    ]
+    with tempfile.TemporaryDirectory() as d:
+        _events_dir(spark, rows, d)
+        monkeypatch.setattr(events, "MARKOV_MAX_TYPES", 2)
+        with pytest.raises(ValueError, match=r"vocabulary\|\^2"):
+            EQ["events_markov_stationary"](spark, d)
+        monkeypatch.setattr(events, "MARKOV_MAX_TYPES", 3)  # 9 >= 5 rows
+        out = EQ["events_markov_stationary"](spark, d).collect()
+    assert sorted(r.event_type for r in out) == list("ABCDE")
