@@ -14,6 +14,12 @@ O(log n)-round large-star/small-star variant exists, but its extra
 per-round cost is wasted on dedup workloads — documented trade-off, not an
 oversight.
 
+The edge-list builders at the end of the module (co-occurrence edges,
+degrees, the rank-capped adjacency, degree-ordered triangle enumeration,
+non-adjacent wedge counts) are the shared graph construction of the
+co-purchase and token co-occurrence operators in ``queries/text.py``. They
+never materialize: each caller places its own lineage cuts.
+
 Scale notes: each round is one shuffle join (edges x labels, both
 partitioned on the join key) + one min-aggregate; ``localCheckpoint``
 truncates the lineage so the plan doesn't grow with iterations; the
@@ -23,8 +29,14 @@ the standard loop-control for iterative algorithms — not a data collect).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# Each node contributes at most this many neighbors, the first in node-key
+# order, to a rank-capped adjacency: the graded cap of the wedge-based link
+# predictors, bounding wedge work at O(|V| * cap^2) instead of
+# O(sum deg^2).
+_CN_NBR_CAP = 16
 
 
 def connected_components(
@@ -232,3 +244,119 @@ def pagerank_fixed(
         # as pagerank() above
         ranks = ranks.localCheckpoint()
     return ranks.select("node", "rank_fp")
+
+
+def cooccurrence_edges(pairs: DataFrame, group: str, item: str) -> DataFrame:
+    """Undirected co-occurrence graph: the distinct ``(u, v)`` item pairs
+    with ``u < v`` whose items share a ``group`` value (parts bought in one
+    order, tokens in one document). ``pairs`` is reduced to its distinct
+    ``(group, item)`` rows first, so repeated lines add nothing; the
+    self-join is keyed on ``group``."""
+    gi = pairs.select(group, item).distinct()
+    a, b = gi.alias("a"), gi.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col(f"a.{group}") == F.col(f"b.{group}"))
+            & (F.col(f"a.{item}") < F.col(f"b.{item}")),
+        )
+        .select(F.col(f"a.{item}").alias("u"), F.col(f"b.{item}").alias("v"))
+        .distinct()
+    )
+
+
+def undirected_degrees(edges: DataFrame) -> DataFrame:
+    """``(node, d)``: the degree of every node of the ``(u, v)`` edge list
+    (each edge counts once at each endpoint)."""
+    return (
+        edges.select(F.col("u").alias("node"))
+        .unionAll(edges.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").cast("bigint").alias("d"))
+    )
+
+
+def capped_adjacency(edges: DataFrame) -> DataFrame:
+    """``(node, nbr)`` over both directions of every ``(u, v)`` edge,
+    keeping each node's first ``_CN_NBR_CAP`` neighbors in ``nbr`` order."""
+    adj = edges.select(
+        F.col("u").alias("node"), F.col("v").alias("nbr")
+    ).unionAll(edges.select(F.col("v"), F.col("u")))
+    return (
+        adj.withColumn(
+            "rn",
+            F.row_number().over(Window.partitionBy("node").orderBy("nbr")),
+        )
+        .filter(F.col("rn") <= _CN_NBR_CAP)
+        .select("node", "nbr")
+    )
+
+
+def nonadjacent_wedge_counts(capped: DataFrame, edges: DataFrame) -> DataFrame:
+    """``(a, b, cn)``: every pair ``a < b`` that is NOT an edge but shares
+    a neighbor in the ``(node, nbr)`` adjacency ``capped``, with ``cn`` the
+    number of such shared neighbors (the wedges ``a - node - b``). Existing
+    edges drop via an anti-join on the normalized ``u < v`` key."""
+    l, r = capped.alias("l"), capped.alias("r")
+    wedge = l.join(
+        r,
+        (F.col("l.node") == F.col("r.node"))
+        & (F.col("l.nbr") < F.col("r.nbr")),
+    ).select(F.col("l.nbr").alias("a"), F.col("r.nbr").alias("b"))
+    return (
+        wedge.join(
+            edges,
+            (wedge.a == edges.u) & (wedge.b == edges.v),
+            "left_anti",
+        )
+        .groupBy("a", "b")
+        .agg(F.count("*").cast("bigint").alias("cn"))
+    )
+
+
+def orient_by_degree(edges: DataFrame, deg: DataFrame) -> DataFrame:
+    """``(x, y, dy)``: every ``(u, v)`` edge pointed from its endpoint that
+    is smaller in the (degree, id) total order to the larger one, carrying
+    the head's degree ``dy`` so wedges can be compared in that same order.
+    ``deg`` is :func:`undirected_degrees` of ``edges``."""
+    e = edges.join(
+        deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u"
+    ).join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
+    u_first = (F.col("du") < F.col("dv")) | (
+        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+    )
+    return e.select(
+        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("x"),
+        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("y"),
+        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dy"),
+    )
+
+
+def oriented_triangles(oriented: DataFrame) -> DataFrame:
+    """``(a, b, c)``: every triangle of the graph once, from the
+    :func:`orient_by_degree` edges — the wedges ``a -> b``, ``a -> c`` with
+    ``b`` before ``c`` in (degree, id) order, closed by an oriented
+    ``b -> c`` edge. Each triangle is found only at its smallest vertex,
+    so the quadratic wedge work lands on low-degree vertices (the
+    Latapy/GraphX orientation that survives power-law graphs)."""
+    o1, o2, o3 = oriented.alias("o1"), oriented.alias("o2"), oriented.alias("o3")
+    return (
+        o1.join(
+            o2,
+            (F.col("o1.x") == F.col("o2.x"))
+            & (
+                F.struct(F.col("o1.dy"), F.col("o1.y"))
+                < F.struct(F.col("o2.dy"), F.col("o2.y"))
+            ),
+        )
+        .join(
+            o3,
+            (F.col("o3.x") == F.col("o1.y"))
+            & (F.col("o3.y") == F.col("o2.y")),
+        )
+        .select(
+            F.col("o1.x").alias("a"),
+            F.col("o1.y").alias("b"),
+            F.col("o2.y").alias("c"),
+        )
+    )

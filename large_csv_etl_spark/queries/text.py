@@ -8,6 +8,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..graph import (
+    _CN_NBR_CAP,
+    capped_adjacency,
+    cooccurrence_edges,
+    nonadjacent_wedge_counts,
+    orient_by_degree,
+    oriented_triangles,
+    pagerank_fixed,
+    undirected_degrees,
+)
 from ..io import load_table
 from .dedup import STOPWORDS
 from .helpers import (
@@ -401,8 +411,6 @@ def text_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = tokens.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     df = tokens.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy("doc_id")
         .orderBy(F.col("tf").desc(), F.col("df").asc(), F.col("token"))
@@ -984,8 +992,6 @@ def graph_token_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-reproducible in any engine, so the query is oracle-graded against
     an unrolled DuckDB power iteration instead of the float version's
     rows-only check. Top 50 by rank, token tie-break."""
-    from ..graph import pagerank_fixed
-
     docs = load_table(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
     arr = _SPARK_TOKENS(F.lower(F.col("text")))
     pairs = F.expr(
@@ -1171,8 +1177,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     dfs = tf.groupBy("token").agg(F.count("*").alias("df"))
-    from pyspark.sql import Window
-
     scored = (
         tf.join(dfs, "token")
         .withColumn(
@@ -1345,8 +1349,6 @@ def text_source_token_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.explode(_SPARK_TOKENS(F.lower(F.col("text")))).alias("token")
     )
     st = tok.groupBy("source", "token").agg(F.count("*").alias("c_st"))
-    from .helpers import materialize_reduced
-
     # feeds the per-source totals, corpus counts, AND the final join
     st = materialize_reduced(st)
     s = st.groupBy("source").agg(
@@ -1483,8 +1485,6 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    from pyspark.sql import Window
-
     first_doc = F.min("doc_id").over(Window.partitionBy("fp"))
     novel = F.sum(F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0))
     return (
@@ -1587,8 +1587,6 @@ def text_token_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-interpolation quantile parity, then one conditional integer sum
     against the broadcast 1-row cutoff table; shares are single
     double divisions of exact BIGINT masses."""
-    from .helpers import materialize_reduced
-
     docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(
         F.size(_SPARK_TOKENS(F.col("text")))
@@ -1686,8 +1684,6 @@ def graph_token_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard distributed LPA round, cost O(|edges|) per round at any
     scale. Fixed round count: parity is exact regardless of whether the
     labeling has converged (the ITERATIVE_PARITY.md contract)."""
-    from .helpers import materialize_reduced
-
     docs = load_table(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
     arr = _SPARK_TOKENS(F.lower(F.col("text")))
     pairs = F.expr(
@@ -1710,8 +1706,6 @@ def graph_token_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    from pyspark.sql import Window
-
     w_argmax = Window.partitionBy("node").orderBy(
         F.col("w_sum").desc(), F.col("label")
     )
@@ -1917,64 +1911,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         F.explode(_SPARK_TOKENS(F.lower(F.col("text")))).alias("token"),
-    ).distinct()
-    a, b = tok.alias("a"), tok.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.token") < F.col("b.token")),
-        )
-        .select(F.col("a.token").alias("u"), F.col("b.token").alias("v"))
-        .distinct()
     )
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-    )
-    e = (
-        edges.join(
-            deg.select(
-                F.col("node").alias("u"), F.col("deg").alias("du")
-            ),
-            "u",
-        )
-        .join(
-            deg.select(
-                F.col("node").alias("v"), F.col("deg").alias("dv")
-            ),
-            "v",
-        )
-    )
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = e.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("x"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("y"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dy"),
-    )
-    o1, o2, o3 = oriented.alias("o1"), oriented.alias("o2"), oriented.alias("o3")
-    tri = (
-        o1.join(
-            o2,
-            (F.col("o1.x") == F.col("o2.x"))
-            & (
-                F.struct(F.col("o1.dy"), F.col("o1.y"))
-                < F.struct(F.col("o2.dy"), F.col("o2.y"))
-            ),
-        )
-        .join(
-            o3,
-            (F.col("o3.x") == F.col("o1.y"))
-            & (F.col("o3.y") == F.col("o2.y")),
-        )
-        .agg(F.count("*").cast("bigint").alias("n_triangles"))
+    edges = cooccurrence_edges(tok, "doc_id", "token")
+    deg = undirected_degrees(edges)
+    tri = oriented_triangles(orient_by_degree(edges, deg)).agg(
+        F.count("*").cast("bigint").alias("n_triangles")
     )
     wedges = deg.agg(
-        F.sum(F.col("deg") * (F.col("deg") - 1) / 2)
+        F.sum(F.col("d") * (F.col("d") - 1) / 2)
         .cast("bigint")
         .alias("n_wedges")
     )
@@ -2341,10 +2285,6 @@ def text_collocation_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lifted.orderBy(F.desc("lift"), "tok_left", "tok_right").limit(50)
 
 
-
-_CN_NBR_CAP = 16  # wedge middles emit at most this many ranked neighbors
-
-
 @_q(
     "graph_common_neighbors",
     f"""
@@ -2397,66 +2337,26 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     used here: the fixture vocabulary is a 31-node complete graph, which
     has no non-adjacent pairs to predict. Existing edges drop via an
     anti-join on the normalized a<b pair key."""
-    from pyspark.sql import Window
-
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
     edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
         )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
     )
-    adj = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("nbr")
-    ).unionAll(edges.select(F.col("v"), F.col("u")))
     # NOT materialized (r16 adjudication of the r15 suspect regression):
     # the wedge self-join references `mid` twice and AQE shares only the
     # shuffle feeding the rank window, but the eager localCheckpoint is a
     # serialization barrier that costs more than the duplicated
     # window-sort it saves — the driver measured +39-61% wall in both r15
     # windows, confirmed by this round's paired A/B
-    mid = (
-        adj.withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("node").orderBy("nbr")),
-        )
-        .filter(F.col("rn") <= _CN_NBR_CAP)
-        .select(F.col("node").alias("middle"), "nbr")
-    )
-    l, r = mid.alias("l"), mid.alias("r")
-    wedge = l.join(
-        r,
-        (F.col("l.middle") == F.col("r.middle"))
-        & (F.col("l.nbr") < F.col("r.nbr")),
-    ).select(F.col("l.nbr").alias("a"), F.col("r.nbr").alias("b"))
-    cand = (
-        wedge.join(
-            edges,
-            (wedge.a == edges.u) & (wedge.b == edges.v),
-            "left_anti",
-        )
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("bigint").alias("common_neighbors"))
-    )
+    mid = capped_adjacency(edges)
+    cand = nonadjacent_wedge_counts(mid, edges)
     return (
-        cand.orderBy(F.desc("common_neighbors"), "a", "b")
+        cand.orderBy(F.desc("cn"), "a", "b")
         .limit(50)
         .select(
             F.col("a").cast("bigint").alias("part_a"),
             F.col("b").cast("bigint").alias("part_b"),
-            "common_neighbors",
+            F.col("cn").alias("common_neighbors"),
         )
     )
 
@@ -2546,32 +2446,12 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-core peeling's exact plan. Every round CTE is AS MATERIALIZED (a
     round-references-previous-round-twice chain re-expands exponentially
     under DuckDB's default CTE inlining)."""
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
     edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
         )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
     )
     n_edges0 = edges.count()
-    deg0 = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
     rows = []
     cur = edges
     # One materialization of the per-round degree table, then every
@@ -2581,16 +2461,16 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-executed once per consumer (up to 3 degree-count shuffles per
     # round); n_before and n_kept were also two separate count() jobs
     # where one aggregate answers both.
-    deg = materialize_reduced(deg0)
+    deg = materialize_reduced(undirected_degrees(edges))
     n_nodes0 = deg.count()
     k = (2 * n_edges0 + n_nodes0 - 1) // n_nodes0 if n_nodes0 else 1
     for rnd in (1, 2, 3):
         stats = deg.agg(
             F.count("*").alias("nb"),
-            F.count(F.when(F.col("deg") >= k, 1)).alias("nk"),
+            F.count(F.when(F.col("d") >= k, 1)).alias("nk"),
         ).collect()[0]
         n_before, n_kept = stats["nb"], stats["nk"]
-        keep = deg.filter(F.col("deg") >= k).select("node")
+        keep = deg.filter(F.col("d") >= k).select("node")
         nxt = materialize_reduced(
             cur.join(keep.select(F.col("node").alias("u")), "u")
             .join(keep.select(F.col("node").alias("v")), "v")
@@ -2600,12 +2480,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((rnd, k, n_kept, n_edges, n_before - n_kept))
         cur = nxt
         if rnd < 3:  # round 3's trailing degree table has no consumer
-            deg = materialize_reduced(
-                cur.select(F.col("u").alias("node"))
-                .unionAll(cur.select(F.col("v").alias("node")))
-                .groupBy("node")
-                .agg(F.count("*").alias("deg"))
-            )
+            deg = materialize_reduced(undirected_degrees(cur))
     return spark.createDataFrame(
         rows,
         "round bigint, k bigint, n_nodes_kept bigint, "
@@ -2723,8 +2598,6 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 hubs (customers whose baskets span authoritative parts).
     Each round is one edge-keyed join + map-side-combinable sum —
     O(|E|) per round, the cluster HITS plan."""
-    from .helpers import materialize_reduced
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
@@ -3185,33 +3058,16 @@ def graph_degree_assortativity(
     table is |parts|-bounded and broadcast to the edge list; the edge
     list itself comes from the co-partitioned per-order pair join the
     basket family already established."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-        )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-    )
     # edges feeds the adjacency twice plus the edge count
-    edges = edges.localCheckpoint()
+    edges = materialize_reduced(
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
+        )
+    )
     adj = edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    deg = adj.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("bigint").alias("d")
-    )
-    deg = deg.localCheckpoint()
+    deg = materialize_reduced(undirected_degrees(edges))
     du = deg.select(F.col("node").alias("src"), F.col("d").alias("x"))
     dv = deg.select(F.col("node").alias("dst"), F.col("d").alias("y"))
     pairs = adj.join(F.broadcast(du), "src").join(F.broadcast(dv), "dst")
@@ -3298,33 +3154,15 @@ def graph_modularity_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
     penalty (LEFT join, COALESCE). Work: the basket-family pair join
     builds edges once; everything after runs on |parts|- and
     |brands|-bounded tables, broadcast-joinable at any scale."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    edges = materialize_reduced(
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
         )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
     )
     nc = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("c")
     )
-    adj = edges.select(F.col("u").alias("src")).unionAll(
-        edges.select(F.col("v").alias("src"))
-    )
-    deg = adj.groupBy(F.col("src").alias("node")).agg(
-        F.count("*").cast("bigint").alias("d")
-    )
+    deg = undirected_degrees(edges)
     dc = (
         deg.join(F.broadcast(nc), "node")
         .groupBy("c")
@@ -3439,70 +3277,26 @@ def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     hold — per-node coefficients over a deterministic stratum are the
     standard estimator (at cluster scale, raise the modulus toward 1
     or cap per-node out-degree instead)."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 4 == 0)
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    edges = materialize_reduced(
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem").filter(
+                F.col("l_orderkey") % 4 == 0
+            ),
+            "l_orderkey",
+            "l_partkey",
         )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
     )
     # |V|-row degree table feeds three branches (both orientation join
     # sides and the final coefficient join): materialize once instead of
     # re-running the degree-count shuffle per consumer
-    deg = materialize_reduced(
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("d"))
-    )
-    e = edges.join(
-        deg.select(F.col("node").alias("u"), F.col("d").alias("du")), "u"
-    ).join(deg.select(F.col("node").alias("v"), F.col("d").alias("dv")), "v")
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = e.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("x"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("y"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dy"),
-    ).localCheckpoint()
-    o1, o2, o3 = oriented.alias("o1"), oriented.alias("o2"), oriented.alias("o3")
-    tri = (
-        o1.join(
-            o2,
-            (F.col("o1.x") == F.col("o2.x"))
-            & (
-                F.struct(F.col("o1.dy"), F.col("o1.y"))
-                < F.struct(F.col("o2.dy"), F.col("o2.y"))
-            ),
-        )
-        .join(
-            o3,
-            (F.col("o3.x") == F.col("o1.y"))
-            & (F.col("o3.y") == F.col("o2.y")),
-        )
-        .select(
-            F.col("o1.x").alias("n1"),
-            F.col("o1.y").alias("n2"),
-            F.col("o2.y").alias("n3"),
-        )
+    deg = materialize_reduced(undirected_degrees(edges))
+    tri = oriented_triangles(
+        materialize_reduced(orient_by_degree(edges, deg))
     )
     pertri = (
-        tri.select(F.col("n1").alias("node"))
-        .unionAll(tri.select(F.col("n2").alias("node")))
-        .unionAll(tri.select(F.col("n3").alias("node")))
+        tri.select(F.col("a").alias("node"))
+        .unionAll(tri.select(F.col("b").alias("node")))
+        .unionAll(tri.select(F.col("c").alias("node")))
         .groupBy("node")
         .agg(F.count("*").cast("bigint").alias("t"))
     )
@@ -3577,38 +3371,26 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     MATERIALIZED per the fixed-point contract in
     docs/ITERATIVE_PARITY.md. Emits one row per hop with the newly
     reached count."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    edges = materialize_reduced(
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
         )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
     )
-    adj = (
-        edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(edges.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint()
+    adj = materialize_reduced(
+        edges.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+            edges.select(F.col("v").alias("src"), F.col("u").alias("dst"))
+        )
     )
     deg = adj.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("bigint").alias("d")
     )
-    seed = deg.orderBy(F.col("d").desc(), "node").limit(1).select("node")
-    seed = seed.localCheckpoint()
+    seed = materialize_reduced(
+        deg.orderBy(F.col("d").desc(), "node").limit(1).select("node")
+    )
     visited = seed
     frontiers = [seed]
     for _ in range(3):
-        nxt = (
+        nxt = materialize_reduced(
             adj.join(
                 F.broadcast(frontiers[-1].withColumnRenamed("node", "src")),
                 "src",
@@ -3616,10 +3398,9 @@ def graph_bfs_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited, "node", "left_anti")
-            .localCheckpoint()
         )
         frontiers.append(nxt)
-        visited = visited.unionAll(nxt).localCheckpoint()
+        visited = materialize_reduced(visited.unionAll(nxt))
     out = None
     for hop, fr in enumerate(frontiers):
         row = fr.agg(F.count("*").cast("bigint").alias("n_new")).select(
@@ -3810,32 +3591,15 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast semi-joins of the 100-row club against the edge list —
     at 100 TB this is the same bounded-dimension pattern as every
     audit in the family."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+    edges = materialize_reduced(
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
         )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
-        .localCheckpoint()
     )
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("d"))
+    deg = undirected_degrees(edges)
+    club = materialize_reduced(
+        deg.orderBy(F.col("d").desc(), "node").limit(100).select("node")
     )
-    club = deg.orderBy(F.col("d").desc(), "node").limit(100).select("node")
-    club = club.localCheckpoint()
     e_club = (
         edges.join(
             F.broadcast(club.withColumnRenamed("node", "u")), "u"
@@ -4407,31 +4171,12 @@ def graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction (handshake identity pins n_edges = sum(deg)/2 exactly);
     the histogram is a second bounded hash agg; density is one fixed
     IEEE chain over exact integers."""
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
     edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
         )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
     )
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("degree"))
-    )
+    deg = undirected_degrees(edges).withColumnRenamed("d", "degree")
     tot = deg.agg(
         F.count("*").cast("bigint").alias("n_nodes"),
         F.expr("cast(sum(degree) as bigint) div 2").alias("n_edges"),
@@ -4518,65 +4263,24 @@ def graph_jaccard_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame
     below their true coefficient — a deliberate, documented estimator,
     not the exact metric. Deterministic (capped_jaccard, a, b)
     top-50."""
-    from pyspark.sql import Window
-
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
     edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
         )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
     )
-    # adj is derived twice (degrees, capped middles) but stays a cheap
-    # projection of the CHECKPOINTED edges — materializing it too
-    # double-buffers ~2|E| rows in block storage and OOMs a vanilla-heap
-    # driver at sf0.1 (measured round 11); recompute-from-blocks wins.
-    adj = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("nbr")
-    ).unionAll(edges.select(F.col("v"), F.col("u")))
-    deg = adj.groupBy("node").agg(
-        F.count("*").cast("bigint").alias("degree")
-    )
+    # the two-way edge list is projected twice (undirected_degrees,
+    # capped_adjacency) but stays a cheap projection of the CHECKPOINTED
+    # edges — materializing it too double-buffers ~2|E| rows in block
+    # storage and OOMs a vanilla-heap driver at sf0.1 (measured round 11);
+    # recompute-from-blocks wins.
+    deg = undirected_degrees(edges)
     # NOT materialized — same adjudication as graph_common_neighbors
     # (the eager checkpoint barrier lost to the duplicated window pass
     # in both r15 driver windows and this round's paired A/B)
-    mid = (
-        adj.withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("node").orderBy("nbr")),
-        )
-        .filter(F.col("rn") <= _CN_NBR_CAP)
-        .select(F.col("node").alias("middle"), "nbr")
-    )
-    l, r = mid.alias("l"), mid.alias("r")
-    wedge = l.join(
-        r,
-        (F.col("l.middle") == F.col("r.middle"))
-        & (F.col("l.nbr") < F.col("r.nbr")),
-    ).select(F.col("l.nbr").alias("a"), F.col("r.nbr").alias("b"))
-    cand = (
-        wedge.join(
-            edges,
-            (wedge.a == edges.u) & (wedge.b == edges.v),
-            "left_anti",
-        )
-        .groupBy("a", "b")
-        .agg(F.count("*").cast("bigint").alias("cn"))
-    )
-    da = deg.select(F.col("node").alias("a"), F.col("degree").alias("deg_a"))
-    db = deg.select(F.col("node").alias("b"), F.col("degree").alias("deg_b"))
+    mid = capped_adjacency(edges)
+    cand = nonadjacent_wedge_counts(mid, edges)
+    da = deg.select(F.col("node").alias("a"), F.col("d").alias("deg_a"))
+    db = deg.select(F.col("node").alias("b"), F.col("d").alias("deg_b"))
     scored = (
         cand.join(F.broadcast(da), "a")
         .join(F.broadcast(db), "b")
@@ -5882,8 +5586,6 @@ def text_zipf_rank_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-vocab sort — then a row_number over the 1024 survivors.
     Exact integers throughout, deterministic (freq DESC, token)
     ties. <= 11-row output."""
-    from pyspark.sql import Window
-
     tk = (
         load_table(spark, sf_dir, "documents")
         .filter(F.trim(F.col("text")) != "")
@@ -6026,8 +5728,6 @@ def text_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     containing doc's cum_end — one vocab-bounded aggregate, no
     per-prefix re-scan). One |docs| window + one token groupBy; the
     4-row spine probes both bounded tables."""
-    from pyspark.sql import Window
-
     toked = (
         load_table(spark, sf_dir, "documents")
         .filter(F.trim(F.col("text")) != "")
@@ -6340,8 +6040,6 @@ def text_source_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("mean_fp"),
     )
-    from pyspark.sql import Window
-
     jumps = monthly.select(
         "*",
         F.abs(
@@ -6435,62 +6133,11 @@ def graph_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select(
         "doc_id",
         F.explode(_SPARK_TOKENS(F.lower(F.col("text")))).alias("token"),
-    ).distinct()
-    a, b = tok.alias("a"), tok.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.token") < F.col("b.token")),
-        )
-        .select(F.col("a.token").alias("u"), F.col("b.token").alias("v"))
-        .distinct()
     )
-    edges = materialize_reduced(edges)
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-    )
-    e = edges.join(
-        deg.select(F.col("node").alias("u"), F.col("deg").alias("du")), "u"
-    ).join(
-        deg.select(F.col("node").alias("v"), F.col("deg").alias("dv")), "v"
-    )
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = e.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("x"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("y"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("dy"),
-    )
-    oriented = materialize_reduced(oriented)
-    o1, o2, o3 = (
-        oriented.alias("o1"),
-        oriented.alias("o2"),
-        oriented.alias("o3"),
-    )
-    tri = (
-        o1.join(
-            o2,
-            (F.col("o1.x") == F.col("o2.x"))
-            & (
-                F.struct(F.col("o1.dy"), F.col("o1.y"))
-                < F.struct(F.col("o2.dy"), F.col("o2.y"))
-            ),
-        )
-        .join(
-            o3,
-            (F.col("o3.x") == F.col("o1.y"))
-            & (F.col("o3.y") == F.col("o2.y")),
-        )
-        .select(
-            F.col("o1.x").alias("a"),
-            F.col("o1.y").alias("b"),
-            F.col("o2.y").alias("c"),
-        )
+    edges = materialize_reduced(cooccurrence_edges(tok, "doc_id", "token"))
+    deg = undirected_degrees(edges)
+    tri = oriented_triangles(
+        materialize_reduced(orient_by_degree(edges, deg))
     )
     tri_edges = None
     for p, q in (("a", "b"), ("a", "c"), ("b", "c")):
@@ -7023,7 +6670,7 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded two-hop reach histogram (ROADMAP_r15 #37) on the part
     co-purchase projection: per node, the count of DISTINCT vertices
     within two hops over the rank-capped adjacency (each node
-    contributes only its first {_CN_NBR_CAP} neighbors in
+    contributes only its first 16 neighbors, ``graph._CN_NBR_CAP``, in
     deterministic part-key order — the graded common-neighbors cap,
     so the expansion is O(|V| * cap^2) with every per-node reach
     bounded at cap + cap^2, never a frontier explosion), then the
@@ -7033,38 +6680,12 @@ def graph_two_hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound validated first per the wave-3 note: hop2 rows are at most
     |V| * cap^2 before the distinct. Exact counts; one guarded
     division per histogram row."""
-    from pyspark.sql import Window
-
-    from .helpers import materialize_reduced
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-    )
-    a, b = li.alias("a"), li.alias("b")
     edges = materialize_reduced(
-        a.join(
-            b,
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")),
+        cooccurrence_edges(
+            load_table(spark, sf_dir, "lineitem"), "l_orderkey", "l_partkey"
         )
-        .select(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-        )
-        .distinct()
     )
-    adj = edges.select(
-        F.col("u").alias("node"), F.col("v").alias("nbr")
-    ).unionAll(edges.select(F.col("v"), F.col("u")))
-    cap = materialize_reduced(
-        adj.withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("node").orderBy("nbr")),
-        )
-        .filter(F.col("rn") <= _CN_NBR_CAP)
-        .select("node", "nbr")
-    )
+    cap = materialize_reduced(capped_adjacency(edges))
     h1, c2 = cap.alias("h1"), cap.alias("c2")
     hop2 = h1.join(c2, F.col("c2.node") == F.col("h1.nbr")).select(
         F.col("h1.node").alias("node"), F.col("c2.nbr").alias("nbr")

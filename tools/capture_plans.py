@@ -8,13 +8,16 @@ Usage:
 --repo selects which checkout's package to import (point it at a git
 worktree of the pre-change commit to capture "before" plans); --suffix
 names the output files <query>_<suffix>.txt. Plans are captured
-statically (no execution) at --sf-dir.
+statically (no execution) at --sf-dir. Per-run ids (expression ``#N``,
+``RDD[N]``, ``plan_id=N``) are masked to ``N`` so two captures of the
+same plan, from two checkouts or two sessions, diff cleanly.
 """
 from __future__ import annotations
 
 import argparse
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -25,6 +28,8 @@ ap.add_argument("--out-dir", required=True)
 ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
 ap.add_argument("names", nargs="+")
 a = ap.parse_args()
+
+_RUN_IDS = re.compile(r"(#|RDD\[|plan_id=)\d+")
 
 sys.path.insert(0, a.repo)
 from large_csv_etl_spark.queries import all_queries  # noqa: E402
@@ -40,7 +45,7 @@ for name in a.names:
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
-        text = buf.getvalue()
+        text = _RUN_IDS.sub(r"\1N", buf.getvalue())
     except Exception as exc:  # plan capture must never block the round
         text = f"PLAN CAPTURE FAILED: {type(exc).__name__}: {exc}\n"
     path = os.path.join(a.out_dir, f"{name}_{a.suffix}.txt")
