@@ -211,13 +211,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ngram_jaccard_pairs_from_sh(shingle_rows(docs))
 
 
-def _ngram_jaccard_pairs_from_sh(sh: DataFrame) -> DataFrame:
-    """The exact-Jaccard pair pipeline over a prepared (doc_id, shingle)
-    table. (Sharing one shingle table across estimator branches was
-    tested in round 15 and rejected — materializing the shingle stream
-    lost to recomputing it — so this split's only remaining value is
-    keeping the pair pipeline separately readable/testable; every caller
-    passes a fresh ``shingle_rows``.)"""
+def shingle_overlap(sh: DataFrame) -> DataFrame:
+    """Shared-shingle counts of every candidate pair over a prepared
+    (doc_id, shingle) table, with the DF-capped set size of each side —
+    returns (doc_a, doc_b, n_shared, n_a, n_b) with doc_a < doc_b. The
+    input of the Jaccard and containment entries. (Sharing one shingle
+    table across estimator branches was tested in round 15 and rejected
+    — materializing the shingle stream lost to recomputing it — so
+    every caller passes a fresh shingle table.)"""
     # One shuffle groups each shingle's posting list; the DF cap and the
     # pair generation both happen on that list, and the materialization
     # makes "computed once" literally true — the posting-list table feeds
@@ -238,14 +239,29 @@ def _ngram_jaccard_pairs_from_sh(sh: DataFrame) -> DataFrame:
     )
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
-    jac = F.col("n_shared").cast("double") / (
-        F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_shared")
-    )
     # No broadcast hint: `pairs` is usually far smaller than `sizes`
     # (|docs| rows) at scale — AQE picks the right build side at runtime.
     return (
         pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
         .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_shared",
+            F.col("sa.n_sh").alias("n_a"),
+            F.col("sb.n_sh").alias("n_b"),
+        )
+    )
+
+
+def _ngram_jaccard_pairs_from_sh(sh: DataFrame) -> DataFrame:
+    """The exact-Jaccard pair pipeline over a prepared (doc_id, shingle)
+    table: pairs of trigram Jaccard >= 0.2 over ``shingle_overlap``."""
+    jac = F.col("n_shared").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_shared")
+    )
+    return (
+        shingle_overlap(sh)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= 0.2)
     )
@@ -1103,29 +1119,11 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     share everything up to the last expression, so at 100 TB both run off
     one shingle shuffle when composed."""
     docs = load_table(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
-    sh = shingle_rows(docs)
-    # materialized for the same 3-branch reuse as dedup_ngram_jaccard
-    buckets = materialize_reduced(
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .filter(F.size("docs") <= MAX_SHINGLE_DF)
-    )
-    sizes = buckets.select(F.explode("docs").alias("doc_id")).groupBy(
-        "doc_id"
-    ).agg(F.count("*").alias("n_sh"))
-    pairs = (
-        _posting_list_pairs(buckets.filter(F.size("docs") >= 2))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
     cont = F.col("n_shared").cast("double") / F.least(
-        F.col("sa.n_sh"), F.col("sb.n_sh")
+        F.col("n_a"), F.col("n_b")
     )
     return (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        shingle_overlap(shingle_rows(docs))
         .select("doc_a", "doc_b", cont.alias("containment"))
         .filter(F.col("containment") >= 0.6)
     )
@@ -1383,8 +1381,6 @@ def dedup_source_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataF
     candidates are |shared fps| x O(|sources|^2) worst case and the
     output is <= C(|sources|, 2) rows; totals broadcast back for the
     ratio."""
-    from .helpers import materialize_reduced
-
     docs = load_table(spark, sf_dir, "documents").filter(F.trim(F.col("text")) != "")
     toked = docs.select(
         "source",
@@ -2182,7 +2178,6 @@ def dedup_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.trim(F.col("text")) != ""
     )
-    from pyspark.sql import Window
 
     toks = docs.select(
         "doc_id", F.split(F.trim(F.lower(F.col("text"))), r"\s+").alias("t")
@@ -2305,35 +2300,10 @@ def dedup_stopword_insensitive(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered = docs.select("doc_id", toks.alias("toks")).filter(
         F.size("toks") >= 3
     )
-    from .helpers import materialize_reduced
-
     sh = filtered.select(
         "doc_id", F.explode(_shingles("toks", 3)).alias("shingle")
     )
-    buckets = materialize_reduced(
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .filter(F.size("docs") <= MAX_SHINGLE_DF)
-    )
-    sizes = buckets.select(F.explode("docs").alias("doc_id")).groupBy(
-        "doc_id"
-    ).agg(F.count("*").alias("n_sh"))
-    pairs = (
-        _posting_list_pairs(buckets.filter(F.size("docs") >= 2))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("n_shared").cast("double") / (
-        F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_shared")
-    )
-    return (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.2)
-    )
+    return _ngram_jaccard_pairs_from_sh(sh)
 
 
 @_q(
@@ -3193,30 +3163,13 @@ def dedup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.trim(F.col("text")) != ""
     )
-    sh = shingle_rows(docs)
-    buckets = materialize_reduced(
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .filter(F.size("docs") <= MAX_SHINGLE_DF)
-    )
-    sizes = (
-        buckets.select(F.explode("docs").alias("doc_id"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_sh"))
-    )
-    shared = (
-        _posting_list_pairs(buckets.filter(F.size("docs") >= 2))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa, sb = sizes.alias("sa"), sizes.alias("sb")
     jac = F.col("n_shared").cast("double") / (
-        F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_shared")
+        F.col("n_a") + F.col("n_b") - F.col("n_shared")
     )
     full_pairs = materialize_reduced(
-        shared.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+        shingle_overlap(shingle_rows(docs)).select(
+            "doc_a", "doc_b", jac.alias("jaccard")
+        )
     )
     strong = full_pairs.filter(F.col("jaccard") >= 0.2).select(
         "doc_a", "doc_b"
@@ -3744,35 +3697,13 @@ def dedup_containment_disagreement(spark: SparkSession, sf_dir: str) -> DataFram
     docs = load_table(spark, sf_dir, "documents").filter(
         F.trim(F.col("text")) != ""
     )
-    sh = shingle_rows(docs)
-    buckets = materialize_reduced(
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .filter(F.size("docs") <= MAX_SHINGLE_DF)
-    )
-    sizes = buckets.select(F.explode("docs").alias("doc_id")).groupBy(
-        "doc_id"
-    ).agg(F.count("*").alias("n_sh"))
-    pairs = (
-        _posting_list_pairs(buckets.filter(F.size("docs") >= 2))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    banded = (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            F.expr(
-                "CAST((10 * n_shared) div least(sa.n_sh, sb.n_sh)"
-                " AS BIGINT)"
-            ).alias("cont_decile"),
-            F.expr(
-                "CAST((10 * n_shared) div (sa.n_sh + sb.n_sh - n_shared)"
-                " AS BIGINT)"
-            ).alias("jac_decile"),
-        )
+    banded = shingle_overlap(shingle_rows(docs)).select(
+        F.expr("CAST((10 * n_shared) div least(n_a, n_b) AS BIGINT)").alias(
+            "cont_decile"
+        ),
+        F.expr(
+            "CAST((10 * n_shared) div (n_a + n_b - n_shared) AS BIGINT)"
+        ).alias("jac_decile"),
     )
     return (
         banded.groupBy("cont_decile", "jac_decile")
@@ -3866,30 +3797,8 @@ def dedup_anchor_prefilter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trim(F.col("text")) != ""
     )
     # truth scope: the graded jaccard pipeline verbatim
-    sh = shingle_rows(docs)
-    buckets = materialize_reduced(
-        sh.groupBy("shingle")
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
-        .filter(F.size("docs") <= MAX_SHINGLE_DF)
-    )
-    sizes = buckets.select(F.explode("docs").alias("doc_id")).groupBy(
-        "doc_id"
-    ).agg(F.count("*").alias("n_sh"))
-    pairs = (
-        _posting_list_pairs(buckets.filter(F.size("docs") >= 2))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("n_shared"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    jac = F.col("n_shared").cast("double") / (
-        F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_shared")
-    )
-    truth = (
-        pairs.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(jac >= 0.2)
-        .select("doc_a", "doc_b")
+    truth = _ngram_jaccard_pairs_from_sh(shingle_rows(docs)).select(
+        "doc_a", "doc_b"
     )
     # anchor candidates: one (first, last) trigram key per doc
     toks = F.split(_norm_text(F.col("text")), r"\s+")

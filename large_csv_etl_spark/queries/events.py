@@ -85,6 +85,33 @@ def events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def session_frame(spark: SparkSession, sf_dir: str, *carry: str) -> DataFrame:
+    """Shared 30-min-gap session assignment (the graded
+    events_sessionization machinery) at event grain — returns
+    (user_id, ts, event_id, *carry, session_id), where ``carry`` names
+    the further event columns the caller reads downstream. A session
+    continues while the gap to the user's previous event (ordered by
+    ts, event_id) is <= 30 minutes; one user-partitioned shuffle feeds
+    both window passes."""
+    df = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # Compare at micros (not cast-to-long seconds) so boundary gaps agree
+    # exactly with the oracle's `ts - LAG(ts) <= INTERVAL 30 MINUTE`.
+    # unix_micros requires TIMESTAMP; parquet without isAdjustedToUTC reads
+    # as TIMESTAMP_NTZ, and with a UTC session TZ the cast is a pure
+    # reinterpretation (no wall-clock shift).
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap_ok = ts_us - F.lag(ts_us).over(w) <= 1800 * 1_000_000
+    cols = ("user_id", "ts", "event_id", *carry)
+    flagged = df.select(
+        *cols, F.when(gap_ok, 0).otherwise(1).alias("new_session")
+    )
+    return flagged.select(
+        *cols, F.sum("new_session").over(cum).alias("session_id")
+    )
+
+
 @_q(
     "events_sessionization",
     """
@@ -112,24 +139,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-based sessionization (30-min inactivity gap) via lag + running
     sum — the batch equivalent of Structured Streaming's session_window.
     One shuffle on user_id; both window passes share the partitioning."""
-    df = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    # Compare at micros (not cast-to-long seconds) so boundary gaps agree
-    # exactly with the oracle's `ts - LAG(ts) <= INTERVAL 30 MINUTE`.
-    # unix_micros requires TIMESTAMP; parquet without isAdjustedToUTC reads
-    # as TIMESTAMP_NTZ, and with a UTC session TZ the cast is a pure
-    # reinterpretation (no wall-clock shift).
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap_ok = ts_us - F.lag(ts_us).over(w) <= 1800 * 1_000_000
-    flagged = df.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(gap_ok, 0).otherwise(1).alias("new_session"),
-    )
-    sessions = flagged.withColumn("session_id", F.sum("new_session").over(cum))
-    return sessions.groupBy("user_id", "session_id").agg(
+    return session_frame(spark, sf_dir).groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
@@ -595,8 +605,6 @@ def events_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over the already-reduced hourly series (8,760 rows/year at any
     SF), not the raw events — the reduction shuffles, the window doesn't
     bottleneck."""
-    from pyspark.sql import Window
-
     hourly = (
         load_table(spark, sf_dir, "events")
         .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour_start"))
@@ -1067,7 +1075,6 @@ def events_type_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("c_dt"))
     )
-    from .helpers import materialize_reduced
 
     dt = materialize_reduced(dt)  # feeds day totals, type totals, final join
     d = dt.groupBy("day_start").agg(F.sum("c_dt").alias("n_day"))
@@ -1154,19 +1161,8 @@ def events_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interval self-join alternative is quadratic on hot days).
     Duplicate instants collapse by aggregation BEFORE the window, so the
     running sum never depends on tie order."""
-    df = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap_ok = ts_us - F.lag(ts_us).over(w) <= 1800 * 1_000_000
     sess = (
-        df.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.when(gap_ok, 0).otherwise(1).alias("new_session"),
-        )
-        .withColumn("session_id", F.sum("new_session").over(cum))
+        session_frame(spark, sf_dir)
         .groupBy("user_id", "session_id")
         .agg(
             F.min("ts").alias("session_start"),
@@ -1177,7 +1173,6 @@ def events_concurrency_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("day", F.col("session_start").cast("timestamp")),
         )
     )
-    from .helpers import materialize_reduced
 
     # the union below references sess twice (starts + ends branch);
     # without this the whole sessionization subtree executes once per
@@ -1298,7 +1293,6 @@ def events_watermark_late_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("late_us") <= 3_600_000_000, "d_within_1h")
         .otherwise("e_beyond_1h")
     )
-    from .helpers import materialize_reduced
 
     bucketed = materialize_reduced(
         late.groupBy(bucket.alias("lateness_bucket")).agg(
@@ -3201,7 +3195,7 @@ def events_cadence_autocorrelation(
     )
     daily = ev.groupBy("day").agg(F.count("*").cast("bigint").alias("cnt"))
     # |days|-bounded and feeds four downstream jobs
-    daily = daily.localCheckpoint()
+    daily = materialize_reduced(daily)
     stats = daily.agg(
         F.expr("CAST(SUM(cnt) AS BIGINT) div COUNT(*)").alias("mu")
     )
@@ -3288,8 +3282,6 @@ def events_survival_risk_table(
     dies; every number HERE is exact. Work: one hash agg to the
     per-user table, one hash agg to the per-duration table (calendar-
     bounded), one window over durations — the 100 TB plan."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts")
     horizon = ev.agg(F.max("ts").alias("h"))
     u = (
@@ -3390,8 +3382,6 @@ def events_attribution_position(
     streaming_click_attribution; the position window partitions by
     journey (bounded fan-out), and all credit arithmetic is exact
     BIGINT — no float shares to drift."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     p = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("journey_id"),
@@ -3678,8 +3668,6 @@ def events_repeat_purchase_latency(
     purchase subset (tiny after the event-type filter), joined rn=1 to
     rn=2 — at 100 TB both the window and the self-join run on the
     purchase projection, never the raw stream."""
-    from pyspark.sql import Window
-
     ev = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -4017,22 +4005,10 @@ def events_session_depth_quantiles(spark: SparkSession, sf_dir: str) -> DataFram
     reduced table via the proven exact-interpolation parity
     (median/percentile vs MEDIAN/quantile_cont on exact integers). One
     user-partitioned window pass, one reduction, one global aggregate."""
-    df = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap_ok = ts_us - F.lag(ts_us).over(w) <= 1800 * 1_000_000
-    flagged = df.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(gap_ok, 0).otherwise(1).alias("new_session"),
-    )
-    sessions = flagged.withColumn(
-        "session_id", F.sum("new_session").over(cum)
-    )
-    depth = sessions.groupBy("user_id", "session_id").agg(
-        F.count("*").cast("bigint").alias("n_events")
+    depth = (
+        session_frame(spark, sf_dir)
+        .groupBy("user_id", "session_id")
+        .agg(F.count("*").cast("bigint").alias("n_events"))
     )
     return depth.agg(
         F.count("*").cast("bigint").alias("n_sessions"),
@@ -4098,19 +4074,7 @@ def events_type_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame
     The distinct table is materialized once and shared by the totals,
     margins, and pair branches (Catalyst has no cross-branch CSE; the
     DuckDB side mirrors with a MATERIALIZED CTE)."""
-    df = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap_ok = ts_us - F.lag(ts_us).over(w) <= 1800 * 1_000_000
-    flagged = df.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "event_type",
-        F.when(gap_ok, 0).otherwise(1).alias("new_session"),
-    )
-    sess = flagged.withColumn("session_id", F.sum("new_session").over(cum))
+    sess = session_frame(spark, sf_dir, "event_type")
     st = materialize_reduced(
         sess.select("user_id", "session_id", "event_type").distinct()
     )
@@ -4629,21 +4593,7 @@ def events_value_by_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     (helpers.davg) so partition-order float accumulation cannot
     diverge. Depth cardinality is bounded by the longest session. Two
     windows + the rollup, all sharing the user_id shuffle."""
-    df = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap_ok = ts_us - F.lag(ts_us).over(w) <= 1800 * 1_000_000
-    flagged = df.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "value",
-        F.when(gap_ok, 0).otherwise(1).alias("new_session"),
-    )
-    sessions = flagged.withColumn(
-        "session_id", F.sum("new_session").over(cum)
-    )
+    sessions = session_frame(spark, sf_dir, "value")
     sw = Window.partitionBy("user_id", "session_id").orderBy(
         "ts", "event_id"
     )
@@ -5442,29 +5392,6 @@ _SESSION_SIZES_SQL = """
 """
 
 
-def _session_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared 30-min-gap session assignment (the graded
-    events_sessionization machinery) carrying value through — returns
-    (user_id, session_id, value) at event grain."""
-    df = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    gap_ok = ts_us - F.lag(ts_us).over(w) <= 1800 * 1_000_000
-    flagged = df.select(
-        "user_id",
-        "ts",
-        "event_id",
-        "value",
-        F.when(gap_ok, 0).otherwise(1).alias("new_session"),
-    )
-    return flagged.select(
-        "user_id",
-        "value",
-        F.sum("new_session").over(cum).alias("session_id"),
-    )
-
-
 @_q(
     "events_session_depth_decay",
     f"""
@@ -5502,7 +5429,7 @@ def events_session_depth_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     division. One user shuffle (sessionization) + bounded-table
     arithmetic after."""
     sizes = (
-        _session_frame(spark, sf_dir)
+        session_frame(spark, sf_dir)
         .groupBy("user_id", "session_id")
         .agg(F.count("*").cast("bigint").alias("sz"))
     )
@@ -5571,7 +5498,7 @@ def events_value_per_session_distribution(
     >= 0 structurally: fixture values are positive; a refunds-bearing
     feed would sign-split, documented)."""
     totals = (
-        _session_frame(spark, sf_dir)
+        session_frame(spark, sf_dir, "value")
         .groupBy("user_id", "session_id")
         .agg(
             F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
@@ -5738,8 +5665,6 @@ def events_absence_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (COALESCE, documented). Exact integer epoch-day arithmetic
     (micros div 86400e6, positive so floor == trunc); one (user, day)
     dedup shuffle + one user window over the reduced day sets."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     active = ev.select(
         "user_id",
@@ -5806,8 +5731,6 @@ def events_value_pareto_share(
     division (n_top = 0 on <10 users -> NULL). One user shuffle +
     one window over the reduced per-user table + a broadcast 1-row
     totals join."""
-    from pyspark.sql import Window
-
     from .helpers import DEC as _DEC
 
     ev = load_table(spark, sf_dir, "events")
@@ -5897,8 +5820,6 @@ def events_interevent_cv2(spark: SparkSession, sf_dir: str) -> DataFrame:
     prescription). Eligibility: >= 2 gaps and s1 > 0 (all-simultaneous
     streams carry no cadence — documented). Output is a bounded 5-label
     histogram; one user shuffle."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     gaps = ev.select(
         "user_id",
@@ -5984,8 +5905,6 @@ def events_peak_hour_stability(
     (IS DISTINCT FROM, NULL-safe at the first week which never
     counts). Exact integers end-to-end; bounded |types x weeks|
     intermediates; one rollup + one window."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type",
@@ -6098,8 +6017,6 @@ def events_type_cooccurrence_matrix(
     |types| rows per session, so the join output is |sessions| x
     |types|^2 at worst, reduced map-side. Two user-keyed shuffles +
     broadcast marginals."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -11,11 +11,12 @@ broadcast-hash automatically under the 64MB threshold set in session.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
 from .helpers import DEC, davg, dsum, materialize_reduced, sql_davg, sql_dsum
+from .windows import daily_cents
 
 QUERIES = {}
 ORACLES = {}
@@ -661,8 +662,6 @@ def q2_min_cost_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape: correlated MIN subquery per group — rewritten as a
     window min + filter, the scalable form (one shuffle on the group key;
     the naive correlated rewrite would re-aggregate per outer row)."""
-    from pyspark.sql import Window
-
     part = load_table(spark, sf_dir, "part")
     w = Window.partitionBy("p_type")
     return (
@@ -840,7 +839,6 @@ def q20_dominant_supplier_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, so the window reuses the same hash-partitioning (one shuffle
     total). Exact DECIMAL share comparison, no division."""
     li = load_table(spark, sf_dir, "lineitem")
-    from pyspark.sql import Window
 
     sp = li.groupBy("l_suppkey", "l_partkey").agg(
         F.sum(F.col("l_quantity").cast("decimal(12,4)")).alias("qty")
@@ -1178,7 +1176,6 @@ def q21_sole_late_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey", "l_suppkey")
         .agg(F.max(late).alias("is_late"))
     )
-    from pyspark.sql import Window
 
     w = Window.partitionBy("l_orderkey")
     per_o = per_os.withColumn("n_supp", F.count("*").over(w)).withColumn(
@@ -1661,7 +1658,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the reduced table is |customers|-bounded and feeds 7 downstream jobs
     # (two quantile localizations + the final bucketing) — checkpoint it
     # so orders is scanned once, not once per job
-    rfm = rfm.localCheckpoint()
+    rfm = materialize_reduced(rfm)
     f_med = exact_quantiles(rfm, "frequency", [0.5])[0]
     m_med = exact_quantiles(rfm, "monetary", [0.5])[0]
     return rfm.groupBy(
@@ -1972,8 +1969,6 @@ def agg_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantize to dollars: Gini is scale-invariant, so coarser units only
     merge near-equal customers). Ties need no ordering decision — any
     permutation of equal values has the same rank sum."""
-    from pyspark.sql import Window
-
     orders = load_table(spark, sf_dir, "orders")
     rev = orders.groupBy("o_custkey").agg(
         F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
@@ -2078,8 +2073,6 @@ def agg_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim joins; both shares are window sums over that bounded table
     (exact BIGINT cents, cast BIGINT before every double division per
     the HUGEINT window-sum rule)."""
-    from pyspark.sql import Window
-
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -2317,8 +2310,6 @@ def agg_robust_location_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic); median and midhinge reuse the graded interpolated
     quantile contract. One global sort of the reduced cents column for
     the ranks; everything else is single-pass aggregation."""
-    from pyspark.sql import Window
-
     orders = load_table(spark, sf_dir, "orders")
     c = orders.select(
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
@@ -2403,8 +2394,6 @@ def agg_largest_remainder_percent(spark: SparkSession, sf_dir: str) -> DataFrame
     allocation is bit-stable and the invariant SUM(allocated)=100 is
     structural, not lucky; pinned in pytest alongside the
     at-most-one-point deviation from the floor."""
-    from pyspark.sql import Window
-
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     nation = load_table(spark, sf_dir, "nation")
@@ -2496,8 +2485,6 @@ def agg_simpsons_paradox_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is exact integer arithmetic, never order-dependent double
     accumulation. Scale: everything beyond the first map-side-combinable
     |groups x statuses| aggregate runs on a <=15-row table."""
-    from pyspark.sql import Window
-
     seg = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority", "o_orderstatus")
@@ -2656,8 +2643,6 @@ def agg_lorenz_curve_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins ties; the only doubles are the two final share divisions.
     The window runs over the reduced per-customer table, then 10
     rows."""
-    from pyspark.sql import Window
-
     orders = load_table(spark, sf_dir, "orders")
     per_cust = orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast(DEC)).alias("v")
@@ -2858,7 +2843,7 @@ def customer_segment_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("late_spend_dec"),
     )
     # |customers|-bounded and feeds two quantile passes + the rollup
-    cust = cust.localCheckpoint()
+    cust = materialize_reduced(cust)
     f_e = exact_quantiles(
         cust.filter(F.col("early_freq") > 0), "early_freq", [0.5]
     )[0]
@@ -2917,8 +2902,6 @@ def agg_trimmed_mean_by_group(
     One window pass over the group partitioning the final aggregate
     reuses, so the whole operator is a single shuffle on the group
     key."""
-    from pyspark.sql import Window
-
     w = Window.partitionBy("o_orderpriority").orderBy(
         "o_totalprice", "o_orderkey"
     )
@@ -2943,6 +2926,26 @@ def agg_trimmed_mean_by_group(
             F.sum(F.col("price").cast(DEC)).cast("double")
             / F.count(F.col("price"))
         ).alias("kept_davg"),
+    )
+
+
+def fo_cents_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared input of the F-vs-O two-sample tests: per integer-cents
+    price, the count of F orders (``a``) and of O orders (``b``).
+    Returns (cents, a, b)."""
+    v = (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderstatus").isin("F", "O"))
+        .select(
+            F.col("o_orderstatus").alias("g"),
+            F.round(F.col("o_totalprice") * 100, 0)
+            .cast("bigint")
+            .alias("cents"),
+        )
+    )
+    return v.groupBy("cents").agg(
+        F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
+        F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
     )
 
 
@@ -2994,22 +2997,7 @@ def agg_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream z-test needs. The only single-partition stage is the
     window over distinct cents values; at 100 TB that table is still
     ~1e6 rows (price-domain bounded) — range-partition it if not."""
-    from pyspark.sql import Window
-
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
-    per = v.groupBy("cents").agg(
-        F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
-        F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
-    )
+    per = fo_cents_counts(spark, sf_dir)
     w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
     cum = per.select(
         "a",
@@ -3081,22 +3069,7 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the distinct-value table, one cumulative window over it. The
     cross products stay under 2^63 while n_F*n_O < 9e18 (fine to ~3e9
     rows/side); beyond that, route the lattice through DECIMAL(38,0)."""
-    from pyspark.sql import Window
-
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
-    per = v.groupBy("cents").agg(
-        F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
-        F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
-    )
+    per = fo_cents_counts(spark, sf_dir)
     w = Window.orderBy("cents").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -3169,8 +3142,6 @@ def agg_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     domain-bounded table) joined back broadcast. Moment sums go through
     DECIMAL (exact) before the single BIGINT->DOUBLE conversion; row
     products rx2*ry2 stay under 2^63 to ~1e9 rows per group."""
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("flag"),
         F.round(F.col("l_quantity") * 100, 0).cast("bigint").alias("xv"),
@@ -3464,7 +3435,7 @@ def agg_revenue_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("date_add(dmin, CAST(datediff(dmax, dmin) div 2 AS INT))")
         .alias("mid_day")
     )
-    per = (
+    per = materialize_reduced(
         li.crossJoin(F.broadcast(bounds))
         .groupBy("part")
         .agg(
@@ -3481,7 +3452,6 @@ def agg_revenue_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("v2"),
         )
-        .localCheckpoint()
     )
     both_p = per.filter(
         F.col("q1").isNotNull() & F.col("q2").isNotNull() & (F.col("q1") > 0)
@@ -3760,8 +3730,6 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     second fixed IEEE chain. Scale: BIGINT rank sums hold to ~1.5e9
     rows/group (N*(2N+1) < 2^63); beyond that route dr products
     through DECIMAL(38,0)."""
-    from pyspark.sql import Window
-
     v = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus").isin("F", "O", "P"))
@@ -4303,8 +4271,6 @@ def agg_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     F,O,P within each) order per the k-group float-sum rule. Same
     scale shape as agg_mann_whitney_u: everything reduces through the
     price-domain-bounded distinct-cents table."""
-    from pyspark.sql import Window
-
     v = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus").isin("F", "O", "P"))
@@ -4457,8 +4423,6 @@ def agg_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistic are ONE scalar IEEE chain with a single sqrt — scalars
     only, so the k-group float-sum hazard doesn't arise. Year
     extraction is on the NTZ order date under the session UTC pin."""
-    from pyspark.sql import Window
-
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
     yr = F.year("o_orderdate")
     yearly = (
@@ -4674,22 +4638,7 @@ def agg_qq_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a 9-row broadcast spine joined on the cumulative threshold;
     everything stays on the exact integer lattice except the final
     per-decile ratio division."""
-    from pyspark.sql import Window
-
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
-    per = v.groupBy("cents").agg(
-        F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
-        F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
-    )
+    per = fo_cents_counts(spark, sf_dir)
     per = materialize_reduced(per)
     w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     cum = per.select(
@@ -4798,8 +4747,6 @@ def agg_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-11 float-chain rule, NULL-guarded for a degenerate zero
     variance. Scale: jt_x2 <= N^2 holds to ~3e9 rows in BIGINT; the
     variance chain is pure double arithmetic on 4 scalars."""
-    from pyspark.sql import Window
-
     v = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus").isin("F", "O", "P"))
@@ -5208,8 +5155,6 @@ def agg_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     N<=k. Scale: everything reduces through the price-domain-bounded
     distinct-cents table; no data-row sort or shuffle beyond one hash
     agg."""
-    from pyspark.sql import Window
-
     v = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus").isin("F", "O", "P"))
@@ -5439,17 +5384,7 @@ def agg_theil_sen_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation is an equi-join on day arithmetic (Spark side explodes
     a 30-element lag spine and joins on date_add), shuffle bounded by
     the |days| table."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     left = daily.select(
         "day",
@@ -5540,8 +5475,6 @@ def agg_gini_mean_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     for n < 2. Scale: sum(x*c*dr) ~ n^2 * mean(x) overflows BIGINT
     near ~2e9 order rows at this price domain — route through
     DECIMAL(38,0) beyond (documented lattice budget)."""
-    from pyspark.sql import Window
-
     per = (
         load_table(spark, sf_dir, "orders")
         .select(
@@ -5647,22 +5580,7 @@ def agg_two_sample_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     [1, n]; on empty groups every lookup is NULL (total, no division
     anywhere). Scale: bounded by the distinct-cents table like every
     rank entry in this family."""
-    from pyspark.sql import Window
-
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
-    per = v.groupBy("cents").agg(
-        F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
-        F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
-    )
+    per = fo_cents_counts(spark, sf_dir)
     per = materialize_reduced(per)
     w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, 0)
     cum = per.select(
@@ -6010,22 +5928,7 @@ def agg_cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     join anywhere). Exact BIGINT counts (n_f*n_o < 2^63 holds to ~3e9
     rows/side), ONE division, NULL-guarded empty sides. Scale: the
     distinct-cents table bounds everything."""
-    from pyspark.sql import Window
-
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
-    per = v.groupBy("cents").agg(
-        F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
-        F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
-    )
+    per = fo_cents_counts(spark, sf_dir)
     w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
     cum = per.select(
         "a",
@@ -6207,8 +6110,6 @@ def agg_hodges_lehmann_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     division anywhere. Scale: everything is bounded by the
     distinct-cents tables and the 8-per-value cap (the ROADMAP_r13 #4
     panel design)."""
-    from pyspark.sql import Window
-
     from .helpers import phash60
 
     orders = load_table(spark, sf_dir, "orders")
@@ -6367,8 +6268,6 @@ def agg_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e20 — past int64, inside decimal). dw ~ 2 means no serial
     correlation. One day rollup, one 1-row broadcast fit, one lag
     window over the |days|-bounded series."""
-    from pyspark.sql import Window
-
     daily = (
         load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
@@ -6749,8 +6648,6 @@ def agg_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     double chain (one sqrt), NULL-guarded for degenerate one-sided
     sequences and 2 n1 n2 <= n (variance <= 0). One day rollup, one
     bounded median lookup, one lag window."""
-    from pyspark.sql import Window
-
     daily = (
         load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
@@ -6862,8 +6759,6 @@ def agg_quartile_skewness(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation. One guarded division per stratum (IQR = 0 on a
     degenerate stratum -> NULL). Bounded by the per-stratum
     distinct-cents tables."""
-    from pyspark.sql import Window
-
     v = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(
@@ -7129,22 +7024,7 @@ def agg_ansari_bradley(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact BIGINT sums (budget: Q2 ~ n^3/3 needs n < 3e6; beyond that
     move the cubic sum to DECIMAL(38,0)), then ONE fixed double chain
     (casts, one sqrt), NULL-guarded for degenerate all-tied data."""
-    from pyspark.sql import Window
-
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
-    per = v.groupBy("cents").agg(
-        F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
-        F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
-    )
+    per = fo_cents_counts(spark, sf_dir)
     w = Window.orderBy("cents").rowsBetween(Window.unboundedPreceding, -1)
     cum = per.select(
         "a",
@@ -7260,17 +7140,7 @@ def agg_siegel_repeated_medians_banded(
     engines on backward pairs. Inner medians: ONE cumulative window
     partitioned by day_i; outer median: the per-value machinery over
     the |days|-bounded median table."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     left = daily.select(
         F.col("day").alias("day_i"),
@@ -7562,17 +7432,7 @@ def agg_extreme_spacings(spark: SparkSession, sf_dir: str) -> DataFrame:
     over (cents, day) so duplicate totals order deterministically.
     Everything is bounded by the |days| rollup; exact integers end to
     end."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("cents", "day")
     sp = daily.select(
         (F.col("cents") - F.lag("cents").over(w)).alias("gap"),
@@ -7650,8 +7510,6 @@ def agg_coefficient_quartile_variation(
     on an all-zero stratum -> NULL, impossible on positive prices but
     guarded for ANSI totality). Bounded by the per-stratum
     distinct-cents tables; no moment sums anywhere."""
-    from pyspark.sql import Window
-
     v = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(
@@ -7748,8 +7606,6 @@ def agg_tukey_trimean(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4 quarters x 100 cents -> dollars), a single exact-int-to-double
     division identical in both engines. Bounded by the per-status
     distinct-cents tables."""
-    from pyspark.sql import Window
-
     v = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderstatus").alias("g"),
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(
@@ -7859,17 +7715,7 @@ def agg_lag_sign_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded (~2.4k rows); each lag is one window pass over it, the two
     branches unioned (LAG offsets must be literals in Spark); weekly
     seasonality reads as lag-7 agreement above lag-1."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     delta = daily.select(
         "day",
         (F.col("cents") - F.lag("cents").over(Window.orderBy("day"))).alias(
@@ -8053,17 +7899,7 @@ def agg_turning_point_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is empty there and n_turning coalesces to 0).
     Cast-per-factor double z with one SQRT; NULL below n = 3. One day
     rollup + one ordered window over the bounded spine."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     ctx = daily.select(
         "cents",
@@ -8156,10 +7992,6 @@ def agg_mad_zscore_outlier_census(
     rational — no float ever enters a comparison, no division
     anywhere). Budget: dev < 2^38 cents x 10^4 < 2^52. Bounded by the
     distinct-cents table; one broadcast median + one broadcast MAD."""
-    from pyspark.sql import Window
-
-    from .helpers import materialize_reduced
-
     v = load_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(
             "cents"
@@ -8291,17 +8123,7 @@ def agg_sen_slope_confidence_band(spark: SparkSession, sf_dir: str) -> DataFrame
     toward zero, DuckDB // floors, they agree only there), clamped to
     [1, N]. Two more cumulative lookups on the existing per-value
     slope table — no new shuffle shape."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     left = daily.select(
         "day",
@@ -8451,17 +8273,7 @@ def agg_cox_stuart_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     h offset comes from a 1-row broadcast, positive integer division
     only); one guarded division over one IEEE sqrt. Single-row
     output."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     idx = daily.select(
         "cents", F.row_number().over(Window.orderBy("day")).alias("rn")
@@ -8568,8 +8380,6 @@ def agg_decile_ratio_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair; two guarded divisions per stratum (positive cents make the
     guards ANSI formality). Bounded by per-stratum distinct-cents
     tables, one shuffle."""
-    from pyspark.sql import Window
-
     v = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(
@@ -8700,17 +8510,7 @@ def agg_bartels_rank_vn(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Bartels 1982 asymptotic), NULL-guarded alongside the ratio for
     constant series (zero rank variance) and the single-day
     degenerate. One day rollup + two bounded windows + one reduce."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     rk = daily.select(
         "day",
         (
@@ -8810,17 +8610,7 @@ def agg_wallis_moore_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     end; one day rollup + two ordered windows over the bounded spine;
     z is one fixed IEEE chain with a single SQRT, guarded below
     n = 4."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     seq = daily.select(
         "day",
@@ -8939,8 +8729,6 @@ def agg_blomqvist_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
     census is one wide conditional aggregate against the two 1-row
     broadcast cuts; exact integer counts with one guarded division.
     Two per-value rollups + one scan-wide reduce."""
-    from pyspark.sql import Window
-
     v = load_table(spark, sf_dir, "lineitem").select(
         F.round(F.col("l_quantity") * 100, 0).cast("bigint").alias("qc"),
         F.round(F.col("l_extendedprice") * 100, 0)
@@ -9092,8 +8880,6 @@ def agg_winsorized_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     second moment in int64 to ~sf10; positive values make // and div
     agree). One per-value rollup, one broadcast cut join, two
     reduces."""
-    from pyspark.sql import Window
-
     v = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("g"),
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(

@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
+from .events import session_frame
+from .helpers import materialize_reduced
 
 QUERIES = {}
 ORACLES = {}
@@ -577,25 +579,7 @@ def temporal_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFram
     set, no float arithmetic anywhere. At 100 TB the expansion key
     (user, day) is the partition key the sessionizer already shuffled
     on."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
-    flagged = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(ts_us - F.lag(ts_us).over(w) <= 1800 * 1_000_000, 0)
-        .otherwise(1)
-        .alias("new_session"),
-    )
-    sessions = flagged.select(
-        "user_id",
-        F.sum("new_session")
-        .over(w.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("bigint")
-        .alias("session_id"),
-        "ts",
-    )
+    sessions = session_frame(spark, sf_dir)
     bounds = sessions.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("session_start"), F.max("ts").alias("session_end")
     )
@@ -1054,7 +1038,6 @@ def temporal_gap_islands_coverage(
         )
         .distinct()
     )
-    from .helpers import materialize_reduced
 
     du = materialize_reduced(du)  # |status| x |days| rows, read 3x below
     w = Window.partitionBy("status").orderBy("day")
@@ -1203,8 +1186,6 @@ def temporal_asof_staleness_profile(
     contract, so hour-grain rows would explode the output without
     adding signal (documented deviation from the ROADMAP sketch).
     Unmatched events are counted, not silently dropped."""
-    from .helpers import materialize_reduced
-
     matched = QUERIES["asof_join_latest_order"](spark, sf_dir)
     matched = materialize_reduced(matched)
     st = matched.filter(F.col("matched_orderkey").isNotNull()).select(
@@ -1311,10 +1292,6 @@ def temporal_order_interarrival_profile(
     customers contribute no gap. Gaps are non-negative so DuckDB //
     and Spark div agree; one customer shuffle + bounded day-grain
     rollups."""
-    from pyspark.sql import Window
-
-    from .helpers import materialize_reduced
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.to_date("o_orderdate").alias("d"),

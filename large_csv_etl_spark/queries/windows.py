@@ -955,19 +955,7 @@ def window_sma_crossover(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualify (row 20 onward). All windows run over the calendar-bounded
     daily table after one map-side-combinable aggregation — the single-
     partition window is |days| rows at any data scale."""
-    from pyspark.sql import Window
-
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     wd = Window.orderBy("day")
     w = daily.select(
         "day",
@@ -1125,15 +1113,7 @@ def window_donchian_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel excludes the current row by construction, ROWS 20 PRECEDING
     .. 1 PRECEDING). First row has no channel -> NULL flags, pinned
     identically in both engines."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-20, -1)
     hi = F.max("cents").over(w)
     lo = F.min("cents").over(w)
@@ -1179,15 +1159,7 @@ def window_drawup_symmetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     Runs both running extrema in ONE ordered window pass over the
     |days|-bounded exact-cents curve; everything is integer until the
     final ratio division."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -1463,15 +1435,7 @@ def window_ema_macd(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped tail mass is <2% for both spans). Budget: 2^20 x 1e10
     cents x 40 terms ~ 4e17 < 2^63. One window pass over the
     |days|-bounded series; the two EMAs share it."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
 
     def ema_terms(weights: list[int]):
@@ -1619,15 +1583,7 @@ def window_aroon_indicator(spark: SparkSession, sf_dir: str) -> DataFrame:
     the |days|-bounded series this runs on; a longer series bumps the
     literal. Positions are series positions (trading-day convention),
     not calendar gaps."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     seq = daily.select(
         "day",
         "cents",
@@ -1706,15 +1662,7 @@ def window_stochastic_oscillator(spark: SparkSession, sf_dir: str) -> DataFrame:
     division — a float SMA over window rows would be frame-order-
     dependent. Both %K divisions are single identical IEEE chains on
     exact integers. Two window passes over the |days|-bounded series."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-13, 0)
     frames = daily.select(
         "day",
@@ -1783,15 +1731,7 @@ def window_price_percentile_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     90-element arrays over the |days|-bounded series — negligible
     state; at corpus scale the daily rollup bounds everything
     upstream."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-89, 0)
     framed = daily.select(
         "day", "cents", F.collect_list("cents").over(w).alias("lst")
@@ -1854,15 +1794,7 @@ def window_keltner_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer 10-row frame sum with ONE division, NULL until the frame
     holds 10 deltas. Budget: 2^20 weights x ~1e10 daily cents x 32
     terms ~ 3e17 < 2^63 (same lattice budget as the graded MACD)."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
 
     num = F.lit(0).cast("bigint")
@@ -1965,15 +1897,7 @@ def window_streak_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate series; flat moves are excluded from the sign sequence,
     documented). Scale: every window runs on the |days|-bounded
     series."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     moves = daily.select(
         "day",
@@ -2076,15 +2000,7 @@ def window_underwater_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-episode table). Duration counts trading positions, not
     calendar days (documented). One running-max window + one
     row_number over the |days|-bounded series."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     curve = daily.select(
         "day",
@@ -2457,15 +2373,7 @@ def window_roc_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     structurally positive cents, NULL only on the warm-up rows where
     the lag is missing). One lag window over the |days|-bounded
     series; positions are series positions per the family convention."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     lag12 = F.lag("cents", 12).over(w)
     return daily.select(
@@ -2564,8 +2472,9 @@ _DAILY_CENTS_SQL = """
 """
 
 
-def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Shared daily-revenue-cents series (the family's spine)."""
+def daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared daily-revenue-cents series (the family's spine), also the
+    input of the trend tests in relational.py. Returns (day, cents)."""
     return (
         load_table(spark, sf_dir, "orders")
         .groupBy(F.to_date("o_orderdate").alias("day"))
@@ -2623,7 +2532,7 @@ def window_williams_r(spark: SparkSession, sf_dir: str) -> DataFrame:
     and flat frames (ANSI totality); both divisions are single IEEE
     chains on exact integers snapped to the 1e-9 lattice. Two window
     passes over the |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-13, 0)
     frames = daily.select(
         "day",
@@ -2733,7 +2642,7 @@ def window_trix_indicator(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE chain on them, NULL on the first row only (num > 0
     structurally: cents > 0 and w0 > 0). One window pass over the
     |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     num = F.lit(0).cast("bigint")
     den = F.lit(0).cast("bigint")
@@ -2800,7 +2709,7 @@ def window_ulcer_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     final division + sqrt. NULL on warm-up rows (frame < 14). Two
     window passes (running peak, then RMS frame) over the
     |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     p = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     peak = F.max("cents").over(p)
     dd = daily.select(
@@ -2868,7 +2777,7 @@ def window_threshold_reversal_count(
     warm-up frames (<20 rows) are structurally excluded by the
     COUNT(*)=20 gate, keeping ANSI totality trivial. One window pass +
     one bounded month rollup."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-19, 0)
     full = F.count("*").over(w) == 20
     flags = daily.select(
@@ -3016,7 +2925,7 @@ def window_donchian_breakout_runs(
     within the breakout subsequence. Per run: start day, length, max
     overshoot above the prior high in exact cents. Three window passes
     + one bounded rollup over the |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-20, -1)
     flagged = daily.select(
         "day",
@@ -3084,7 +2993,7 @@ def window_chande_momentum(spark: SparkSession, sf_dir: str) -> DataFrame:
     warm-up frames (count of non-null deltas < 14) and on flat frames
     (su + sd = 0 — ANSI totality). One lag + one frame pass over the
     |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     lagc = F.lag("cents").over(w)
     # GREATEST ignores NULLs in BOTH engines (greatest(NULL, 0) = 0), which
@@ -3158,7 +3067,7 @@ def window_detrended_oscillator(
     exact sum, and rows whose displaced frame was not full (ln20 <>
     20) are NULL. One frame pass + one lag pass over the
     |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-19, 0)
     sma = daily.select(
         "day",
@@ -3430,7 +3339,7 @@ def window_hull_ma(spark: SparkSession, sf_dir: str) -> DataFrame:
     shorter than its span), so present-mass renormalization on partial
     frames is meaningless — warm-up rows report frame_n and NULL. One
     fixed num/12240/100 double chain on complete frames."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
     num = None
     for k, c in enumerate(_HULL_C):
@@ -3699,7 +3608,7 @@ def window_donchian_width_percentile(
     250-frame materializes as a list and the count happens outside).
     Pure integer comparisons; one division by the always-positive
     history size. 250-element arrays over the |days|-bounded series."""
-    daily = _daily_cents(spark, sf_dir)
+    daily = daily_cents(spark, sf_dir)
     w20 = Window.orderBy("day").rowsBetween(-19, 0)
     widths = daily.select(
         "day",
@@ -4076,15 +3985,7 @@ def window_robust_frame_zscore(
     only float is the final guarded division (MAD = 0 on a
     majority-constant frame -> NULL, documented). 30-element arrays
     over the |days|-bounded spine."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day").rowsBetween(-29, 0)
     framed = daily.select(
         "day", "cents", F.collect_list("cents").over(w).alias("lst")
@@ -4195,17 +4096,7 @@ def window_coppock_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL roc/coppock, not phantom zeros (the chande lag-NULL lesson).
     One day rollup + one ordered window; at scale the unpartitioned
     ORDER BY day spine is |days| rows, driver-safe."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(
-                F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
-            )
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     w = Window.orderBy("day")
 
     def roc_fp(k):
@@ -4313,15 +4204,7 @@ def window_median_crossing_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram is capped at 30 (the absence-streaks precedent, cap
     stated). Exact integers end to end, no division; the only
     unpartitioned windows ride the |days| spine."""
-    daily = (
-        load_table(spark, sf_dir, "orders")
-        .groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
+    daily = daily_cents(spark, sf_dir)
     daily = materialize_reduced(daily)
     per = daily.groupBy(F.col("cents").alias("v")).agg(
         F.count("*").cast("bigint").alias("c")

@@ -398,6 +398,21 @@ def test_cooccurrence_lift_perfect_pairing(spark):
     assert abs(r.lift - 1.0) < 1e-12
 
 
+def test_sessionization_thirty_minute_boundary(spark):
+    """A gap of exactly 30:00 keeps the session open; 30:00.000001
+    opens a new one (the micros comparison every session builder
+    shares)."""
+    t0 = dt.datetime(2024, 1, 1, 0, 0)
+    t1 = t0 + dt.timedelta(minutes=30)
+    t2 = t1 + dt.timedelta(minutes=30, microseconds=1)
+    rows = [(i, t, 1, "view", 1.0, "{}") for i, t in enumerate((t0, t1, t2))]
+    with tempfile.TemporaryDirectory() as d:
+        _events_dir(spark, rows, d)
+        out = EVENT_QUERIES["events_sessionization"](spark, d).collect()
+    out = sorted(out, key=lambda r: r.session_id)
+    assert [r.n_events for r in out] == [2, 1]
+
+
 def test_weekday_effect_bps_sum_exactly_10000(spark):
     out = EVENT_QUERIES["events_weekday_effect"](spark, SF_DIR).collect()
     assert sum(r.allocated_bps for r in out) == 10000
