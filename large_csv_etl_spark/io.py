@@ -314,31 +314,6 @@ def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).parquet(path)
 
 
-def get_table_stats(df: DataFrame) -> dict:
-    """A1-A4 in one pass (the reference issues 3 separate SQLite queries,
-    /root/reference/src/core/db_manager.py:262-277)."""
-    row = df.agg(
-        F.count("*").alias("total"),
-        F.min("amount").alias("min_amount"),
-        F.max("amount").alias("max_amount"),
-        F.round(F.avg("amount"), 2).alias("avg_amount"),
-        F.round(F.sum("amount"), 2).alias("sum_amount"),
-    ).first()
-    status_counts = {
-        r["status"]: r["count"] for r in df.groupBy("status").count().collect()
-    }
-    return {
-        "total_records": row["total"],
-        "status_counts": status_counts,
-        "amount_stats": {
-            "min": row["min_amount"],
-            "max": row["max_amount"],
-            "avg": row["avg_amount"],
-            "sum": row["sum_amount"],
-        },
-    }
-
-
 # The written table's invariants: check name -> builder of its
 # violating-row predicate — the reference's 7 validation queries
 # (reference ``src/core/db_manager.py:326-346``). The A5 final-data

@@ -118,6 +118,33 @@ def _cosine_scores_arrow(emb_n: DataFrame, qrows) -> DataFrame:
     )
 
 
+HUBNESS_PANEL = 200
+
+
+def _hubness_panel(emb_n: DataFrame, name: str) -> list:
+    """Collect the hubness query panel ``vec_id < 200`` as
+    [(q_id, qv, qnrm)]. The collect is bounded only while ``vec_id`` is
+    unique, so that is enforced, not assumed: one row past the panel is
+    collected at most, and its presence aborts the query."""
+    qrows = (
+        emb_n.filter(F.col("vec_id") < HUBNESS_PANEL)
+        .select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").alias("qv"),
+            F.col("nrm").alias("qnrm"),
+        )
+        .limit(HUBNESS_PANEL + 1)
+        .collect()
+    )
+    if len(qrows) > HUBNESS_PANEL:
+        raise ValueError(
+            f"{name}: more than {HUBNESS_PANEL} embeddings with vec_id < "
+            f"{HUBNESS_PANEL}; the driver-side query panel requires vec_id "
+            f"to be unique"
+        )
+    return qrows
+
+
 @_q(
     "sim_cosine_topk",
     """
@@ -2783,15 +2810,7 @@ def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same vectorized Arrow score pass as sim_hubness_kocc (guide §4.2;
     # bit-identity argued on _cosine_scores_arrow) — the 200-vector
     # panel is the graded bound, collected as metadata
-    qrows = (
-        emb_n.filter(F.col("vec_id") < 200)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-        )
-        .collect()
-    )
+    qrows = _hubness_panel(emb_n, "sim_hubness_audit")
     scored = (
         _cosine_scores_arrow(emb_n, qrows)
         .filter(F.col("vec_id") != F.col("q_id"))
@@ -4468,15 +4487,7 @@ def sim_hubness_kocc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # metadata) and score all pairs in one vectorized Arrow pass instead
     # of the interpreted crossJoin fold (guide §4.2; bit-identity argued
     # on _cosine_scores_arrow)
-    qrows = (
-        emb_n.filter(F.col("vec_id") < 200)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-        )
-        .collect()
-    )
+    qrows = _hubness_panel(emb_n, "sim_hubness_kocc")
     scored = (
         _cosine_scores_arrow(emb_n, qrows)
         .filter(F.col("vec_id") != F.col("q_id"))

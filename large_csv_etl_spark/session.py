@@ -6,6 +6,20 @@ Spark confs. Defaults target local[N] testing but are chosen to also be the
 right *shape* for a large cluster: AQE on (runtime coalescing + skew-join
 handling), UTC session timezone (oracle-comparison determinism), Arrow
 enabled for any pandas-UDF path.
+
+For ``local`` masters the Python workers start through
+``_worker/graft_daemon.py`` (``spark.python.daemon.module`` plus
+``spark.executorEnv.PYTHONPATH`` set to that one directory). Spark calls
+``importlib.invalidate_caches()`` at the start of every Python task, and on
+CPython 3.11 that makes each zip importer re-read its archive's directory:
+``pyspark.zip`` and the spark-core jar, about 0.1-0.2 s of CPU per task
+and half of a ``streaming_user_totals`` pass's Python CPU. The daemon imports
+PySpark from the unpacked ``$SPARK_HOME/python`` tree instead and drops the
+jar from the worker path. With no unpacked tree it leaves the path as Spark
+built it. Cluster masters get neither conf (their executors may not have
+this file; see docs/DEPLOY_100TB.md). An ``extra_conf`` daemon module wins;
+an ``extra_conf`` PYTHONPATH is kept, with ``WORKER_DIR`` appended so that
+the daemon still starts.
 """
 
 from __future__ import annotations
@@ -13,6 +27,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory holding graft_daemon.py and nothing else: on the workers'
+# PYTHONPATH it adds the daemon module without exposing this package.
+WORKER_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker")
 
 
 def get_spark(
@@ -71,7 +89,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    if master.startswith("local"):
+        pypath = extra.pop("spark.executorEnv.PYTHONPATH", None)
+        builder = builder.config(
+            "spark.python.daemon.module", "graft_daemon"
+        ).config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (pypath, WORKER_DIR) if p),
+        )
+    for k, v in extra.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

@@ -9,6 +9,7 @@ each other."""
 from __future__ import annotations
 
 from collections import Counter
+from fractions import Fraction
 
 from hypothesis import given, settings, strategies as st
 
@@ -147,7 +148,8 @@ def test_theil_sen_sign_split_division(diff, lag):
     diff*10^4/lag in BOTH floor-division (DuckDB //) and trunc-division
     (Spark div) semantics — the reason the entry splits the sign
     (agg_theil_sen_banded)."""
-    expect = int(diff * 10000 / lag)  # python int() truncates toward zero
+    # exact: a float quotient is inexact once |diff| * 10^4 passes 2^53
+    expect = int(Fraction(diff * 10000, lag))  # int() truncates toward zero
     sign = -1 if diff < 0 else 1
     # floor-division form (DuckDB // on the nonnegative |diff| is safe)
     got_floor = sign * ((abs(diff) * 10000) // lag)

@@ -614,6 +614,28 @@ def test_hubness_kocc_degenerate_uniform(spark):
     assert out[0]["kocc_skewness"] is None
 
 
+def test_hubness_panel_bound_requires_unique_vec_id(spark):
+    """The driver-side panel collect (vec_id < 200) is bounded only by
+    vec_id being unique: 201 panel rows from 5 repeated ids abort both
+    hubness queries; 200 distinct ids plus one outside the panel pass."""
+    from pyspark.sql import functions as F
+
+    from large_csv_etl_spark.queries.similarity import _hubness_panel
+
+    rows = [(i % 5, [1.0, float(i)], 0) for i in range(201)]
+    with tempfile.TemporaryDirectory() as d:
+        _emb_dir(spark, rows, d)
+        for name in ("sim_hubness_kocc", "sim_hubness_audit"):
+            with pytest.raises(ValueError, match=f"{name}: .*unique"):
+                SIM_QUERIES[name](spark, d)
+    emb_n = spark.range(201).select(
+        "id",
+        F.array(F.lit(1.0)).alias("embedding"),
+        F.lit(1.0).alias("nrm"),
+    ).withColumnRenamed("id", "vec_id")
+    assert len(_hubness_panel(emb_n, "t")) == 200
+
+
 def test_pq_subspace_distortion_localized(spark):
     """Two same-label vectors differing only in dim 0 by 2.0: all
     distortion lands in subspace 0 (err2 = 2 * (1e6)^2, rel 0.2,

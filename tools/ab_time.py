@@ -12,11 +12,14 @@ during each run (the bracket that says how trustworthy the WALL number is).
 extra_conf — the toggle-only A/B lever (e.g.
 --conf spark.sql.join.preferSortMergeJoin=true).
 """
-import argparse, json, subprocess, sys
+import argparse, json, os, subprocess, sys
+
+# The checkout this file belongs to, so that two checkouts time their own code.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r'''
 import sys, time, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv.pop(1))
 def cpu():
     with open("/proc/stat") as f:
         p = f.readline().split()
@@ -54,7 +57,7 @@ a = ap.parse_args()
 conf = dict(kv.split("=", 1) for kv in a.conf)
 for n in a.names:
     r = subprocess.run(
-        [sys.executable, "-c", CHILD, n, a.sf_dir, str(a.runs),
+        [sys.executable, "-c", CHILD, ROOT, n, a.sf_dir, str(a.runs),
          json.dumps(conf)],
         capture_output=True, text=True)
     for line in r.stdout.splitlines():
