@@ -15,6 +15,8 @@ partitioned scans and writes. What remains engine code:
 
 from __future__ import annotations
 
+import fnmatch
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -131,6 +133,65 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         return df
     return spark.read.parquet(path)
+
+
+# Spark's own inferred schema per parquet source, remembered with the
+# version of the files it was inferred from:
+# {(absolute path, glob, confs): (file versions, schema JSON)}.
+_INFERRED: dict = {}
+# The confs that change what parquet schema inference returns for ``ts``.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _file_versions(path: str, glob: str | None) -> tuple:
+    """``(path, mtime_ns, size)`` of every parquet file a scan of ``path``
+    matches: the file itself, or the files under the directory whose name
+    matches ``glob``, skipping the ``_``/``.`` names Spark skips. Empty
+    when nothing local matches (an object-store path) or a file vanished
+    while listed."""
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            files += [
+                os.path.join(root, n)
+                for n in names
+                if not n.startswith(("_", "."))
+                and (glob is None or fnmatch.fnmatchcase(n, glob))
+            ]
+    try:
+        stats = [(f, os.stat(f)) for f in sorted(files)]
+    except OSError:
+        return ()
+    return tuple((f, st.st_mtime_ns, st.st_size) for f, st in stats)
+
+
+def inferred_parquet_schema(
+    spark: SparkSession, path: str, glob: str | None = None
+) -> T.StructType:
+    """Spark's schema inference for the parquet files a scan of ``path``
+    reads (``glob`` as ``pathGlobFilter``), run once per version of those
+    files instead of once per call. A file rewritten in place (a new
+    mtime or size) infers again; so does a path that cannot be listed
+    locally, on every call. Each call gets its own ``StructType`` (they
+    are mutable), rebuilt from the remembered JSON."""
+    confs = tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
+    key = (os.path.abspath(path), glob, confs)
+    versions = _file_versions(path, glob)
+    hit = _INFERRED.get(key)
+    if not (versions and hit and hit[0] == versions):
+        reader = spark.read
+        if glob:
+            reader = reader.option("pathGlobFilter", glob)
+        hit = (versions, reader.parquet(path).schema.json())
+        if versions:
+            _INFERRED[key] = hit
+    return T.StructType.fromJson(json.loads(hit[1]))
 
 
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:

@@ -11,6 +11,8 @@ sink).
 
 from __future__ import annotations
 
+import contextlib
+import shutil
 import tempfile
 import uuid
 
@@ -73,6 +75,30 @@ def _adaptive_state_partitions(
     if total <= 0:
         return 0
     return max(1, min(_STATE_PARTITIONS_CAP, -(-total // _STATE_TARGET_BYTES)))
+
+
+@contextlib.contextmanager
+def _checkpoint(prefix: str):
+    """A throwaway checkpoint directory, removed once the drain that used
+    it has terminated: the drained rows live in the memory sink or the
+    foreachBatch capture, never in the checkpoint."""
+    ckpt = tempfile.mkdtemp(prefix=prefix)
+    try:
+        yield ckpt
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _drain(
+    stream_df: DataFrame, tag: str, output_mode: str = "complete"
+) -> DataFrame:
+    """``run_bounded`` into a fresh ``stream_<tag>_…`` memory table through
+    a throwaway ``ckpt_<tag>_…`` checkpoint."""
+    from ..streaming import run_bounded
+
+    name = f"stream_{tag}_{uuid.uuid4().hex[:8]}"
+    with _checkpoint(f"ckpt_{tag}_") as ckpt:
+        return run_bounded(stream_df, name, ckpt, output_mode)
 
 
 def _q(name, oracle=None, adaptive_state=True):
@@ -139,16 +165,13 @@ def streaming_hourly_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``availableNow`` and graded against the batch oracle. Unique memory-sink
     name + throwaway checkpoint per invocation so the entry is rerunnable
     within one session."""
-    from ..streaming import hourly_tumbling_stream, read_events_stream, run_bounded
+    from ..streaming import hourly_tumbling_stream, read_events_stream
 
-    name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_hourly_")
-    return run_bounded(
+    return _drain(
         hourly_tumbling_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet")
         ),
-        name,
-        ckpt,
+        "hourly",
     )
 
 
@@ -186,16 +209,13 @@ def streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_window treats an event landing exactly at prev+gap as a new
     session where the batch form merges it; event times here are
     microsecond-grained so exact boundaries cannot occur.)"""
-    from ..streaming import read_events_stream, run_bounded, sessionization_stream
+    from ..streaming import read_events_stream, sessionization_stream
 
-    name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_sess_")
-    return run_bounded(
+    return _drain(
         sessionization_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet")
         ),
-        name,
-        ckpt,
+        "sess",
     )
 
 
@@ -222,16 +242,13 @@ def streaming_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     and graded against the batch oracle — with sessionization and
     tumbling this puts all three streaming window kinds under the
     external verdict."""
-    from ..streaming import read_events_stream, run_bounded, sliding_window_stream
+    from ..streaming import read_events_stream, sliding_window_stream
 
-    name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_slide_")
-    return run_bounded(
+    return _drain(
         sliding_window_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet")
         ),
-        name,
-        ckpt,
+        "slide",
     )
 
 
@@ -254,15 +271,13 @@ def streaming_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     else. State holds one key per event inside the watermark horizon, so
     memory is bounded by the horizon's key cardinality at 100 TB/day rates,
     unlike an unbounded ``dropDuplicates``."""
-    from ..streaming import dedup_stream, read_events_stream, run_bounded
+    from ..streaming import dedup_stream, read_events_stream
 
     once = read_events_stream(spark, sf_dir, glob="events.parquet")
     twice = once.unionAll(
         read_events_stream(spark, sf_dir, glob="events.parquet")
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_dedup_")
-    return run_bounded(dedup_stream(twice), name, ckpt, output_mode="append").select(
+    return _drain(dedup_stream(twice), "dedup", output_mode="append").select(
         "event_id", "user_id", "event_type", "value"
     )
 
@@ -298,14 +313,11 @@ def streaming_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAX(n_events) — recovered with ``max_by``, which stays correct even
     for negative values (refunds), where a per-column MAX over the value
     sum would not be batching-safe."""
-    from ..streaming import read_events_stream, run_bounded, user_totals_stream
+    from ..streaming import read_events_stream, user_totals_stream
 
-    name = f"stream_totals_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_totals_")
-    drained = run_bounded(
+    drained = _drain(
         user_totals_stream(read_events_stream(spark, sf_dir, glob="events.parquet")),
-        name,
-        ckpt,
+        "totals",
         output_mode="update",
     )
     return drained.groupBy("user_id").agg(
@@ -346,16 +358,13 @@ def streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream-stream join holds both streams' entire history in state.
     Purchase values pass through unaggregated, so no float-accumulation
     caveat applies."""
-    from ..streaming import click_purchase_join_stream, read_events_stream, run_bounded
+    from ..streaming import click_purchase_join_stream, read_events_stream
 
-    name = f"stream_attr_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_attr_")
-    return run_bounded(
+    return _drain(
         click_purchase_join_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet")
         ),
-        name,
-        ckpt,
+        "attr",
         output_mode="append",
     )
 
@@ -377,16 +386,13 @@ def streaming_hourly_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow and graded against the batch COUNT(DISTINCT) oracle.
     The streaming twin the DAU family was missing: tumbling counts and
     sessionization were graded, distinct-user windows were not."""
-    from ..streaming import hourly_users_stream, read_events_stream, run_bounded
+    from ..streaming import hourly_users_stream, read_events_stream
 
-    name = f"stream_hau_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_hau_")
-    return run_bounded(
+    return _drain(
         hourly_users_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet")
         ),
-        name,
-        ckpt,
+        "hau",
     )
 
 
@@ -413,21 +419,14 @@ def streaming_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     join kind (stream-static) the stream-stream attribution entry
     doesn't."""
     from ..io import load_table
-    from ..streaming import (
-        read_events_stream,
-        run_bounded,
-        segment_counts_stream,
-    )
+    from ..streaming import read_events_stream, segment_counts_stream
 
-    name = f"stream_seg_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_seg_")
-    return run_bounded(
+    return _drain(
         segment_counts_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet"),
             load_table(spark, sf_dir, "customer"),
         ),
-        name,
-        ckpt,
+        "seg",
     )
 
 
@@ -465,20 +464,13 @@ def streaming_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rank tier sees |hours x types| rows."""
     from pyspark.sql import Window
 
-    from ..streaming import (
-        hourly_tumbling_stream,
-        read_events_stream,
-        run_bounded,
-    )
+    from ..streaming import hourly_tumbling_stream, read_events_stream
 
-    name = f"stream_topk_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_topk_")
-    drained = run_bounded(
+    drained = _drain(
         hourly_tumbling_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet")
         ),
-        name,
-        ckpt,
+        "topk",
     )
     return (
         drained.select("hour_start", "event_type", "n_events")
@@ -528,21 +520,19 @@ def streaming_upsert_latest_event(
     coverage. Store cost is O(|users|) per publish; at 100 TB the
     per-batch union+window merge becomes a bucketed MERGE into a table
     format (Delta/Iceberg), same semantics."""
-    import shutil
-
     from ..streaming import upsert_maintenance_stream
 
     store = tempfile.mkdtemp(prefix="upsert_store_") + "/store"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_upsert_")
-    upsert_maintenance_stream(
-        spark,
-        sf_dir,
-        store,
-        ckpt,
-        keys=["user_id"],
-        ord_cols=["ts", "event_id"],
-        glob="events.parquet",
-    )
+    with _checkpoint("ckpt_upsert_") as ckpt:
+        upsert_maintenance_stream(
+            spark,
+            sf_dir,
+            store,
+            ckpt,
+            keys=["user_id"],
+            ord_cols=["ts", "event_id"],
+            glob="events.parquet",
+        )
     out = (
         spark.read.parquet(store)
         .select(
@@ -554,9 +544,7 @@ def streaming_upsert_latest_event(
     )
     # materialize before the temp dirs can be cleaned up by the OS; the
     # store itself is tiny (one row per user)
-    out = out.localCheckpoint()
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return out.localCheckpoint()
 
 
 # Left-outer drain scope: watermark delay + join horizon, in microseconds.
@@ -608,20 +596,13 @@ def streaming_leftouter_interval_join(
     the static table — exactly how the watermark-lateness entries scope
     their graded region. Matched rows emit un-gated; the same cutoff
     applies to both sides so the compared sets agree."""
-    from ..streaming import (
-        click_purchase_leftouter_stream,
-        read_events_stream,
-        run_bounded,
-    )
+    from ..streaming import click_purchase_leftouter_stream, read_events_stream
 
-    name = f"stream_louter_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_louter_")
-    drained = run_bounded(
+    drained = _drain(
         click_purchase_leftouter_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet")
         ),
-        name,
-        ckpt,
+        "louter",
         output_mode="append",
     )
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -693,7 +674,6 @@ def streaming_update_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming import read_events_stream
 
     sink_dir = tempfile.mkdtemp(prefix="upd_topk_") + "/capture"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_upd_topk_")
     # repartition(1) guarantees a footer-bearing part file even for the
     # zero-row seed (an empty 0-partition write leaves only _SUCCESS and
     # the read-back cannot infer a schema)
@@ -711,14 +691,15 @@ def streaming_update_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             sink_dir
         )
 
-    q = (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(_capture)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with _checkpoint("ckpt_upd_topk_") as ckpt:
+        q = (
+            counts.writeStream.outputMode("update")
+            .foreachBatch(_capture)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     state = (
         spark.read.parquet(sink_dir)
         .groupBy("user_id")
@@ -778,20 +759,13 @@ def streaming_append_mode_hourly(
     empty on both sides. State is bounded by watermark delay + window
     width at any scale."""
     from ..io import load_table
-    from ..streaming import (
-        hourly_tumbling_stream,
-        read_events_stream,
-        run_bounded,
-    )
+    from ..streaming import hourly_tumbling_stream, read_events_stream
 
-    name = f"stream_append_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_append_")
-    emitted = run_bounded(
+    emitted = _drain(
         hourly_tumbling_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet")
         ),
-        name,
-        ckpt,
+        "append",
         output_mode="append",
     )
     mx = (
@@ -863,20 +837,13 @@ def streaming_fullouter_interval_join(
     strictly below that cutoff, computed deterministically from the
     static table. Same 2 h watermark / 1 h band as the left-outer
     twin; state stays bounded by delay + band at any scale."""
-    from ..streaming import (
-        click_purchase_fullouter_stream,
-        read_events_stream,
-        run_bounded,
-    )
+    from ..streaming import click_purchase_fullouter_stream, read_events_stream
 
-    name = f"stream_fouter_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_fouter_")
-    drained = run_bounded(
+    drained = _drain(
         click_purchase_fullouter_stream(
             read_events_stream(spark, sf_dir, glob="events.parquet")
         ),
-        name,
-        ckpt,
+        "fouter",
         output_mode="append",
     )
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -944,7 +911,6 @@ def streaming_update_mode_user_totals(
     from ..streaming import read_events_stream
 
     sink_dir = tempfile.mkdtemp(prefix="upd_totals_") + "/capture"
-    ckpt = tempfile.mkdtemp(prefix="ckpt_upd_totals_")
     spark.createDataFrame(
         [], "user_id bigint, n_events bigint, total_cents bigint,"
         " batch_id bigint"
@@ -971,14 +937,15 @@ def streaming_update_mode_user_totals(
             F.lit(batch_id).cast("bigint").alias("batch_id"),
         ).write.mode("append").parquet(sink_dir)
 
-    q = (
-        totals.writeStream.outputMode("update")
-        .foreachBatch(_capture)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with _checkpoint("ckpt_upd_totals_") as ckpt:
+        q = (
+            totals.writeStream.outputMode("update")
+            .foreachBatch(_capture)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     cap = spark.read.parquet(sink_dir)
     out = cap.groupBy("user_id").agg(
         F.max_by("n_events", "batch_id").cast("bigint").alias("n_events"),
@@ -1059,41 +1026,35 @@ def streaming_watermark_delay_sweep(
     # of independent jobs). Per-leg results are byte-identical to the
     # sequential form — only the wall-clock changes.
     started = []
-    ckpts = []
     legs = []
-    # If any start/await raises, stop every still-active leg and remove
-    # the temp checkpoints (ADVICE r15 #4): an orphaned StreamingQuery
-    # would keep running in the shared session.
-    try:
-        for hours in (1, 2, 4):
-            name = f"stream_sweep_{hours}h_{uuid.uuid4().hex[:8]}"
-            ckpt = tempfile.mkdtemp(prefix=f"ckpt_sweep_{hours}h_")
-            ckpts.append(ckpt)
-            q = start_bounded(
-                hourly_tumbling_stream(
-                    read_events_stream(spark, sf_dir, glob="events.parquet"),
-                    watermark=f"{hours} hours",
-                ),
-                name,
-                ckpt,
-                output_mode="append",
-            )
-            started.append((hours, name, q))
-        for hours, name, q in started:
-            q.awaitTermination()
-            _sweep_leg(spark, mx, hours, name, legs)
-    except BaseException:
-        import shutil
-
-        for _, _, q in started:
-            try:
-                if q.isActive:
-                    q.stop()
-            except Exception:
-                pass
-        for ckpt in ckpts:
-            shutil.rmtree(ckpt, ignore_errors=True)
-        raise
+    # If any start/await raises, stop every still-active leg (ADVICE r15
+    # #4): an orphaned StreamingQuery would keep running in the shared
+    # session. The checkpoints go once every leg has terminated.
+    with contextlib.ExitStack() as ckpts:
+        try:
+            for hours in (1, 2, 4):
+                name = f"stream_sweep_{hours}h_{uuid.uuid4().hex[:8]}"
+                q = start_bounded(
+                    hourly_tumbling_stream(
+                        read_events_stream(spark, sf_dir, glob="events.parquet"),
+                        watermark=f"{hours} hours",
+                    ),
+                    name,
+                    ckpts.enter_context(_checkpoint(f"ckpt_sweep_{hours}h_")),
+                    output_mode="append",
+                )
+                started.append((hours, name, q))
+            for hours, name, q in started:
+                q.awaitTermination()
+                _sweep_leg(spark, mx, hours, name, legs)
+        except BaseException:
+            for _, _, q in started:
+                try:
+                    if q.isActive:
+                        q.stop()
+                except Exception:
+                    pass
+            raise
     out = legs[0]
     for leg in legs[1:]:
         out = out.unionAll(leg)

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .io import inferred_parquet_schema
 from .queries.helpers import dsum
 
 # Explicit source schema (streams cannot infer). The events fixture has
@@ -42,15 +43,14 @@ def read_events_stream(
 
     The ``ts`` event-time column always comes out as a (micros-precision)
     timestamp regardless of which physical layout the source files use;
-    watermarks and windows downstream never see the difference. The footer
-    probe reads one file's metadata (no data scan) before the stream plan
-    is built — file-source schemas are fixed per query, so this is the
-    one place the layout decision can live."""
+    watermarks and windows downstream never see the difference. The layout
+    comes from Spark's schema inference over the static files, run once
+    per version of those files (``io.inferred_parquet_schema``) before the
+    stream plan is built — file-source schemas are fixed per query, so
+    this is the one place the layout decision can live."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    probe = spark.read
-    if glob:
-        probe = probe.option("pathGlobFilter", glob)
-    ts_type = dict(probe.parquet(source_dir).dtypes)["ts"]
+    schema = inferred_parquet_schema(spark, source_dir, glob)
+    ts_type = schema["ts"].dataType.simpleString()
     reader = spark.readStream.schema(
         _EVENTS_STREAM_FIELDS.format(ts_type="long" if ts_type == "bigint" else ts_type)
     )
@@ -321,7 +321,11 @@ def user_totals_stream(events: DataFrame, watermark: str = "2 hours") -> DataFra
 
     Arrow-batched; the state function is defined inline so it pickles by
     value (a module-global would pickle as a reference and fail import on
-    executors that don't have the repo on sys.path).
+    executors that don't have the repo on sys.path). Only ``user_id`` and
+    ``value`` cross to Python: the projection sits above the watermark, so
+    the event-time maximum is still tracked, and under ``NoTimeout`` the
+    operator filters no late rows with or without ``ts`` (a row behind the
+    watermark is counted either way; pinned in tests/test_streaming.py).
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -346,6 +350,7 @@ def user_totals_stream(events: DataFrame, watermark: str = "2 hours") -> DataFra
 
     return (
         events.withWatermark("ts", watermark)
+        .select("user_id", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
             update_totals,

@@ -212,6 +212,160 @@ def test_user_totals_stream_matches_batch(spark, stream_source, tmp_path):
     assert g == b
 
 
+def _write_events(path, rows, unit="us", tz=None):
+    """Write events rows ``(event_id, epoch_ns, user_id, event_type, value)``
+    with ``ts`` as parquet TIMESTAMP(MICROS or NANOS). Without ``tz`` it
+    reads as TIMESTAMP_NTZ (MICROS) or, under nanosAsLong, int64 (NANOS)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ids, ts, users, types, values = zip(*rows)
+    if unit == "us":
+        ts = [t // 1000 for t in ts]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(ids, pa.int64()),
+                "ts": pa.array(ts, pa.timestamp(unit, tz)),
+                "user_id": pa.array(users, pa.int64()),
+                "event_type": pa.array(types, pa.string()),
+                "value": pa.array(values, pa.float64()),
+                "props": pa.array(["{}"] * len(ids), pa.string()),
+            }
+        ),
+        str(path),
+        version="2.6",
+    )
+
+
+_HOUR_NS = 3600 * 10**9
+_T0_NS = 1_709_251_200 * 10**9  # 2024-03-01 00:00:00 UTC
+
+
+def test_user_totals_stream_keeps_row_behind_watermark(spark, tmp_path):
+    """Two micro-batches (one file each); the second file holds a row 5 h
+    behind the watermark the first batch set. Under NoTimeout the stateful
+    operator filters no late rows, so the final per-user totals equal the
+    batch GROUP BY over both files, late row included."""
+    import os
+    from datetime import datetime
+
+    from large_csv_etl_spark.streaming import start_bounded, user_totals_stream
+
+    src = tmp_path / "src"
+    src.mkdir()
+    late_ns = _T0_NS + 5 * _HOUR_NS  # the watermark after batch 0 is 10:00
+    _write_events(
+        src / "part-0.parquet",
+        [
+            (1, _T0_NS + 10 * _HOUR_NS, 1, "click", 1.25),
+            (2, _T0_NS + 12 * _HOUR_NS, 2, "purchase", 3.10),
+            (3, _T0_NS + 11 * _HOUR_NS, 1, "view", None),
+        ],
+        tz="UTC",
+    )
+    _write_events(
+        src / "part-1.parquet",
+        [
+            (4, late_ns, 1, "purchase", 2.05),
+            (5, _T0_NS + 12 * _HOUR_NS + _HOUR_NS // 2, 2, "click", -0.5),
+        ],
+        tz="UTC",
+    )
+    # the file source takes the oldest file first
+    os.utime(src / "part-0.parquet", ns=(10**12, 10**12))
+    os.utime(src / "part-1.parquet", ns=(2 * 10**12, 2 * 10**12))
+    events = (
+        spark.readStream.schema(
+            "event_id long, ts timestamp, user_id long, event_type string, "
+            "value double, props string"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = start_bounded(
+        user_totals_stream(events),
+        "late_totals_mem",
+        str(tmp_path / "ckpt"),
+        output_mode="update",
+    )
+    q.awaitTermination()
+    data_batches = [p for p in q.recentProgress if p.numInputRows > 0]
+    assert [p.numInputRows for p in data_batches] == [3, 2]
+    # the second file really was read behind the watermark
+    wm = datetime.fromisoformat(data_batches[1].eventTime["watermark"])
+    assert int(wm.timestamp()) * 10**9 - late_ns == 5 * _HOUR_NS
+
+    final = (
+        spark.table("late_totals_mem")
+        .groupBy("user_id")
+        .agg(
+            F.max("n_events").alias("n"),
+            F.max_by("total_fp", "n_events").alias("fp"),
+        )
+    )
+    batch = (
+        spark.read.parquet(str(src))
+        .groupBy("user_id")
+        .agg(
+            F.count("*").alias("n"),
+            F.sum(
+                F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100).cast(
+                    "bigint"
+                )
+            ).alias("fp"),
+        )
+    )
+    got = {r.user_id: (r.n, r.fp) for r in final.collect()}
+    assert got == {r.user_id: (r.n, r.fp) for r in batch.collect()}
+    assert got == {1: (3, 330), 2: (2, 260)}
+
+
+@pytest.mark.parametrize("first, second", [("us", "ns"), ("ns", "us")])
+def test_events_ts_layout_probed_once_per_file_version(
+    spark, tmp_path, first, second
+):
+    """``read_events_stream`` infers the ``ts`` layout once per version of
+    the source files: a second call over unchanged files runs no Spark job,
+    and a rewrite in place with the other layout is probed again and read
+    right (NANOS truncated to micros)."""
+    src = tmp_path / "src"
+    src.mkdir()
+    path = src / "events.parquet"
+
+    def rows(day):
+        return [
+            (i, _T0_NS + (24 * day + i) * _HOUR_NS + 123_456_789, i, "click", 1.0)
+            for i in range(3)
+        ]
+
+    _write_events(path, rows(0), unit=first)
+    read_events_stream(spark, str(src), glob="events.parquet")
+
+    sc = spark.sparkContext
+    group = f"ts_probe_{first}_{second}"
+    sc.setJobGroup(group, "second read_events_stream call")
+    try:
+        read_events_stream(spark, str(src), glob="events.parquet")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    _write_events(path, rows(1), unit=second)
+    events = read_events_stream(spark, str(src), glob="events.parquet")
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    got = run_bounded(
+        events.select("event_id", F.unix_micros("ts").alias("us")),
+        f"ts_layout_{first}_{second}",
+        str(tmp_path / "ckpt"),
+        output_mode="append",
+    )
+    assert {r.event_id: r.us for r in got.collect()} == {
+        i: ts // 1000 for i, ts, *_ in rows(1)
+    }
+
+
 def test_checkpoint_restart_processes_only_new_files(spark, tmp_path):
     """Exactly-once incremental ingestion: a second availableNow run over
     the SAME checkpoint must process only files that arrived after the

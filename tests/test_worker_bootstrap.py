@@ -1,7 +1,8 @@
 """The Python-worker daemon bootstrap (``_worker/graft_daemon.py``): local
 sessions' workers import PySpark from the unpacked tree and carry no jar on
 ``sys.path``; cluster masters and an explicit ``extra_conf`` daemon keep
-Spark's own daemon."""
+Spark's own daemon. The same local-only rule covers the streaming
+checkpoint file manager."""
 
 from __future__ import annotations
 
@@ -111,27 +112,41 @@ class _Builder:
 
 DAEMON = "spark.python.daemon.module"
 PYPATH = "spark.executorEnv.PYTHONPATH"
+CKPT = session.CHECKPOINT_MANAGER_CONF
+FS_CKPT = session.CHECKPOINT_MANAGER
+FC_CKPT = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileContextBasedCheckpointFileManager"
+)
 
 
 @pytest.mark.parametrize(
-    "master, extra, daemon, pypath",
+    "master, extra, daemon, pypath, ckpt",
     [
-        ("local[2]", None, "graft_daemon", session.WORKER_DIR),
-        ("local", None, "graft_daemon", session.WORKER_DIR),
-        ("local[2]", {DAEMON: "pyspark.daemon"}, "pyspark.daemon", session.WORKER_DIR),
+        ("local[2]", None, "graft_daemon", session.WORKER_DIR, FS_CKPT),
+        ("local", None, "graft_daemon", session.WORKER_DIR, FS_CKPT),
+        (
+            "local[2]",
+            {DAEMON: "pyspark.daemon"},
+            "pyspark.daemon",
+            session.WORKER_DIR,
+            FS_CKPT,
+        ),
         (
             "local[2]",
             {PYPATH: "/p"},
             "graft_daemon",
             "/p" + os.pathsep + session.WORKER_DIR,
+            FS_CKPT,
         ),
-        ("spark://host:7077", {PYPATH: "/p"}, None, "/p"),
-        ("spark://host:7077", None, None, None),
-        ("yarn", None, None, None),
+        ("spark://host:7077", {PYPATH: "/p"}, None, "/p", None),
+        ("spark://host:7077", None, None, None, None),
+        ("yarn", None, None, None, None),
+        ("local[2]", {CKPT: FC_CKPT}, "graft_daemon", session.WORKER_DIR, FC_CKPT),
     ],
 )
 def test_get_spark_sets_daemon_confs_for_local_masters_only(
-    monkeypatch, master, extra, daemon, pypath
+    monkeypatch, master, extra, daemon, pypath, ckpt
 ):
     monkeypatch.setattr(
         session, "SparkSession", types.SimpleNamespace(builder=_Builder())
@@ -139,6 +154,7 @@ def test_get_spark_sets_daemon_confs_for_local_masters_only(
     conf = session.get_spark(master=master, extra_conf=extra)
     assert conf.get(DAEMON) == daemon
     assert conf.get(PYPATH) == pypath
+    assert conf.get(CKPT) == ckpt
 
 
 def test_worker_dir_holds_only_the_daemon():
