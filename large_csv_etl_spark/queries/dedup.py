@@ -30,23 +30,13 @@ from .helpers import (
     fp_sum,
     materialize_reduced,
     phash60,
+    registry,
     shard_assign,
     sql_phash60,
     sql_shard,
 )
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 def _norm_text(c):

@@ -28,24 +28,13 @@ from pyspark.sql import functions as F
 
 from ..io import load_table, read_transactions_csv, upsert_by_key
 from ..transform import transform
-from .helpers import DEC, dsum, sql_dsum, sql_phash60
+from .helpers import DEC, dsum, registry, sql_dsum, sql_phash60
 
-QUERIES = {}
-ORACLES = {}
+QUERIES, ORACLES, _q = registry()
 
 DIRTY_CSV = str(
     Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "dirty_transactions.csv"
 )
-
-
-def _q(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 @_q(

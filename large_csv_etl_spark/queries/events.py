@@ -20,24 +20,14 @@ from .helpers import (
     DEC,
     dsum,
     materialize_reduced,
+    registry,
     sql_dsum,
     sql_tvd_expr,
     tvd_fixed_point_aggs,
     tvd_from_fixed_point,
 )
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 @_q(

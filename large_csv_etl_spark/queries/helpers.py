@@ -12,7 +12,7 @@ Spark decimal sums stay inside whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Scale 4 covers money values (2dp) and money*discount products (4dp)
@@ -132,6 +132,79 @@ def sql_phash60(expr: str, hi: bool = False) -> str:
     """DuckDB-side twin of phash60() over a VARCHAR expression."""
     start = 16 if hi else 1
     return f"('0x' || substr(md5({expr}), {start}, 15))::BIGINT"
+
+
+# --- integer micro-unit vectors ------------------------------------------
+# The embedding operators grade exactly by working on round(x * 1e6) as
+# BIGINT: the float32 -> double promotion, the *1e6 product and round()
+# (half away from zero) land identically in both engines, and every sum
+# after that is integer arithmetic, so no result depends on fold order.
+# |x| <= ~10 keeps an element's micro-unit difference d under 2e7, so
+# d^2 <= 4e14 and a 64-dim squared L2 stays far inside int64.
+
+
+def micro6(col: str) -> Column:
+    """The array column ``col`` in integer micro-units:
+    round(x * 1e6) as BIGINT per element (NULL elements stay NULL)."""
+    return F.expr(
+        f"transform({col},"
+        " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
+    )
+
+
+def sq_l2(a: Column, b: Column) -> Column:
+    """Exact squared L2 distance of two micro-unit arrays, folded left to
+    right in BIGINT."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+
+
+def centroid_means(long_df: DataFrame, *keys: str) -> DataFrame:
+    """Per-position centroid of ``(keys..., pos, val6)`` rows: the rounded
+    integer mean of val6, the Lloyd update formula every centroid operator
+    shares. Returns (keys..., pos, cmu)."""
+    return long_df.groupBy(*keys, "pos").agg(
+        F.round(F.sum("val6").cast("double") / F.count("*"))
+        .cast("bigint")
+        .alias("cmu")
+    )
+
+
+def centroid_arrays(long_df: DataFrame, *keys: str) -> DataFrame:
+    """``centroid_means`` packed into one array per key in ``pos`` order.
+    Returns (keys..., c6)."""
+    return centroid_means(long_df, *keys).groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "cmu"))),
+            lambda s: s["cmu"],
+        ).alias("c6")
+    )
+
+
+def registry():
+    """A query module's registry: ``(QUERIES, ORACLES, _q)``.
+
+    ``@_q(name, oracle)`` records the builder under ``name`` in QUERIES
+    and its DuckDB SQL, when given, in ORACLES. Registering a name twice
+    in one registry raises instead of silently replacing the first."""
+    queries: dict = {}
+    oracles: dict = {}
+
+    def q(name: str, oracle: str | None = None):
+        def deco(fn):
+            if name in queries:
+                raise ValueError(f"query {name!r} is already registered")
+            queries[name] = fn
+            if oracle is not None:
+                oracles[name] = oracle
+            return fn
+
+        return deco
+
+    return queries, oracles, q
 
 
 def materialize_reduced(df):

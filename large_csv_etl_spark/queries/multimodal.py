@@ -12,19 +12,9 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..multimodal import attach_payload, decode_payloads, sample_frames
+from .helpers import registry
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 @_q(

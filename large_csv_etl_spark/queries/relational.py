@@ -15,21 +15,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from .helpers import DEC, davg, dsum, materialize_reduced, sql_davg, sql_dsum
+from .helpers import (
+    DEC,
+    davg,
+    dsum,
+    materialize_reduced,
+    registry,
+    sql_davg,
+    sql_dsum,
+)
 from .windows import daily_cents
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # --- A1/A2/A3: the reference's stats queries, on lineitem ------------------
@@ -2949,6 +2946,34 @@ def fo_cents_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+
+def fop_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared input of the three-status (F, O, P) rank tests: one row per
+    F/O/P order with its integer-cents price. Returns (g, cents)."""
+    return (
+        load_table(spark, sf_dir, "orders")
+        .filter(F.col("o_orderstatus").isin("F", "O", "P"))
+        .select(
+            F.col("o_orderstatus").alias("g"),
+            F.round(F.col("o_totalprice") * 100, 0)
+            .cast("bigint")
+            .alias("cents"),
+        )
+    )
+
+
+def priority_cents_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Shared input of the per-priority quantile statistics: per
+    ``o_orderpriority`` stratum and integer-cents price, the order
+    count. Returns (g, cents, c)."""
+    v = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderpriority").alias("g"),
+        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(
+            "cents"
+        ),
+    )
+    return v.groupBy("g", "cents").agg(F.count("*").cast("bigint").alias("c"))
+
 @_q(
     "agg_mann_whitney_u",
     """
@@ -3730,16 +3755,7 @@ def agg_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     second fixed IEEE chain. Scale: BIGINT rank sums hold to ~1.5e9
     rows/group (N*(2N+1) < 2^63); beyond that route dr products
     through DECIMAL(38,0)."""
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O", "P"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
+    v = fop_cents(spark, sf_dir)
     per = v.groupBy("cents").agg(
         F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
         F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
@@ -4271,16 +4287,7 @@ def agg_mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     F,O,P within each) order per the k-group float-sum rule. Same
     scale shape as agg_mann_whitney_u: everything reduces through the
     price-domain-bounded distinct-cents table."""
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O", "P"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
+    v = fop_cents(spark, sf_dir)
     per = v.groupBy("cents").agg(
         F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
         F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
@@ -4747,16 +4754,7 @@ def agg_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-11 float-chain rule, NULL-guarded for a degenerate zero
     variance. Scale: jt_x2 <= N^2 holds to ~3e9 rows in BIGINT; the
     variance chain is pure double arithmetic on 4 scalars."""
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O", "P"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
+    v = fop_cents(spark, sf_dir)
     per = v.groupBy("cents").agg(
         F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("f"),
         F.count(F.when(F.col("g") == "P", 1)).cast("bigint").alias("p"),
@@ -5155,16 +5153,7 @@ def agg_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     N<=k. Scale: everything reduces through the price-domain-bounded
     distinct-cents table; no data-row sort or shuffle beyond one hash
     agg."""
-    v = (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus").isin("F", "O", "P"))
-        .select(
-            F.col("o_orderstatus").alias("g"),
-            F.round(F.col("o_totalprice") * 100, 0)
-            .cast("bigint")
-            .alias("cents"),
-        )
-    )
+    v = fop_cents(spark, sf_dir)
     per = v.groupBy("cents").agg(
         F.count(F.when(F.col("g") == "F", 1)).cast("bigint").alias("a"),
         F.count(F.when(F.col("g") == "O", 1)).cast("bigint").alias("b"),
@@ -6759,15 +6748,7 @@ def agg_quartile_skewness(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation. One guarded division per stratum (IQR = 0 on a
     degenerate stratum -> NULL). Bounded by the per-stratum
     distinct-cents tables."""
-    v = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("g"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(
-            "cents"
-        ),
-    )
-    per = v.groupBy("g", "cents").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
+    per = priority_cents_counts(spark, sf_dir)
     per = materialize_reduced(per)
     w = (
         Window.partitionBy("g")
@@ -7510,15 +7491,7 @@ def agg_coefficient_quartile_variation(
     on an all-zero stratum -> NULL, impossible on positive prices but
     guarded for ANSI totality). Bounded by the per-stratum
     distinct-cents tables; no moment sums anywhere."""
-    v = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("g"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(
-            "cents"
-        ),
-    )
-    per = v.groupBy("g", "cents").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
+    per = priority_cents_counts(spark, sf_dir)
     per = materialize_reduced(per)
     w = (
         Window.partitionBy("g")
@@ -8380,15 +8353,7 @@ def agg_decile_ratio_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair; two guarded divisions per stratum (positive cents make the
     guards ANSI formality). Bounded by per-stratum distinct-cents
     tables, one shuffle."""
-    v = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("g"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(
-            "cents"
-        ),
-    )
-    per = v.groupBy("g", "cents").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
+    per = priority_cents_counts(spark, sf_dir)
     wc = (
         Window.partitionBy("g")
         .orderBy("cents")

@@ -24,30 +24,24 @@ identical in Spark and DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
 from .helpers import (
     hash_bucket as _hash_bucket,
+    materialize_reduced,
+    micro6,
+    phash60,
+    registry,
+    sq_l2,
     shard_assign,
     split_assign,
     sql_shard,
     sql_split_case,
 )
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 @_q(
@@ -121,7 +115,6 @@ def sample_exact_k_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     never materializes more than the group (and at 100 TB you'd pre-filter
     with a hash-rate sample to bound the sort input)."""
     docs = load_table(spark, sf_dir, "documents")
-    from pyspark.sql import Window
 
     w = Window.partitionBy("source").orderBy(
         F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
@@ -215,7 +208,6 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampler's complement). One window pass per source; the cumulative sum
     is CAST BIGINT in the oracle (HUGEINT rule). Shares the whitespace
     token-count contract of queries/text.py."""
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(
@@ -269,7 +261,6 @@ def sample_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     independently — no global single-partition window at 100 TB. One
     window pass; all arithmetic integer-exact (prev_cum < 2^53, FLOOR on
     the double quotient is exact)."""
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(
@@ -357,7 +348,6 @@ def sample_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     256*k pairs total, noise at any real corpus size, in exchange for
     full parallelism. One window pass, no join, no shuffle beyond the
     bucket partitioning."""
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
     hh = F.md5(F.col("doc_id").cast("string"))
@@ -663,7 +653,6 @@ def sample_mixture_solver(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate division. Two tiny aggregates over the |sources|-row stats table
     (itself one map-side-combinable pass over documents); rates then
     broadcast onto the scan exactly like sample_mixture_weighted's."""
-    from .helpers import materialize_reduced
 
     docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.when(F.trim(F.col("text")) == "", F.lit(0)).otherwise(
@@ -888,7 +877,6 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum; SQRT is IEEE-correct in both engines. Companions execute the
     plan: sample_exact_k_per_group takes the alloc_n's,
     sample_random_stratified takes rates."""
-    from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders")
     c = orders.select(
@@ -1078,7 +1066,6 @@ def sample_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorts over (band, md5) — Spark's TakeOrderedAndProject/rangesort
     path, the standard manifest-export shape (sample_export_shards
     then splits this order into shard files)."""
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents").filter(
         F.trim(F.col("text")) != ""
@@ -1208,7 +1195,6 @@ def sample_systematic_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zipWithIndex shape) or keep hash-uniform sampling; graded here at
     the exact-semantics scale where the single sort is the honest
     plan."""
-    from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
     ranked = docs.select(
@@ -1256,7 +1242,6 @@ def sample_balanced_class_downsample(spark: SparkSession, sf_dir: str) -> DataFr
     temperature/mixture reweighting, sample_temperature_mixture); the
     rank window shuffles once on label, and the min size is a broadcast
     1-row aggregate."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     sizes = emb.groupBy("label").agg(F.count("*").alias("n_orig"))
@@ -1447,32 +1432,21 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per round at 100 TB: one broadcast of a single center vector, one
     row-local zip_with distance pass fused with a running LEAST, one
     max-reduce — no corpus shuffle, no |corpus| state."""
-    from pyspark.sql import Window  # noqa: F401
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    vec6 = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
-    ).localCheckpoint()
-    d2_to = F.aggregate(
-        F.zip_with(F.col("v6"), F.col("c6"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
+    vec6 = materialize_reduced(
+        emb.select("vec_id", micro6("embedding").alias("v6"))
     )
+    d2_to = sq_l2(F.col("v6"), F.col("c6"))
     seed = vec6.orderBy("vec_id").limit(1)
-    cur = (
+    cur = materialize_reduced(
         vec6.crossJoin(
             F.broadcast(
                 seed.select(F.col("vec_id").alias("cid"), F.col("v6").alias("c6"))
             )
-        )
-        .select("vec_id", "v6", d2_to.alias("mind"))
-        .localCheckpoint()
+        ).select("vec_id", "v6", d2_to.alias("mind"))
     )
     rows = seed.select(
         F.lit(1).alias("round"),
@@ -1489,14 +1463,12 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("v6").alias("c6"),
             F.col("mind").alias("sel_d2"),
         )
-        cur = (
-            cur.crossJoin(F.broadcast(center))
-            .select(
+        cur = materialize_reduced(
+            cur.crossJoin(F.broadcast(center)).select(
                 "vec_id",
                 "v6",
                 F.least(F.col("mind"), d2_to).alias("mind"),
             )
-            .localCheckpoint()
         )
         row = (
             center.select(
@@ -1604,17 +1576,16 @@ def sample_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "         slice(tokens, 2, size(tokens) - 1),"
         "         (a, b) -> concat(a, ' ', b))"
     )
-    tok = (
+    tok = materialize_reduced(
         docs.select("doc_id", arr.alias("tokens"))
         .filter(F.size("tokens") >= 2)
         .select("doc_id", F.explode(bigrams).alias("token"))
         .distinct()
-        .localCheckpoint()
     )
     covered = None
     selected = []
     out = None
-    all_docs = tok.select("doc_id").distinct().localCheckpoint()
+    all_docs = materialize_reduced(tok.select("doc_id").distinct())
     if all_docs.limit(1).count() == 0:
         # empty corpus: zero rounds, schema-stable empty result
         return docs.sparkSession.range(0).select(
@@ -1652,11 +1623,11 @@ def sample_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_tokens = tok.filter(F.col("doc_id") == pick["doc_id"]).select(
             "token"
         )
-        covered = (
+        covered = materialize_reduced(
             new_tokens
             if covered is None
             else covered.unionAll(new_tokens).distinct()
-        ).localCheckpoint()
+        )
         row_df = docs.sparkSession.range(1).select(
             F.lit(k).cast("int").alias("round"),
             F.lit(pick["doc_id"]).cast("bigint").alias("doc_id"),
@@ -1777,7 +1748,6 @@ def sample_inverse_frequency_weights(spark: SparkSession, sf_dir: str) -> DataFr
     deterministic lang tie-break. One reduction to |langs| rows;
     everything downstream is exact integers plus the final
     weight-as-double rendering."""
-    from pyspark.sql import Window
 
     cls = (
         load_table(spark, sf_dir, "documents")
@@ -1951,7 +1921,6 @@ def sample_quota_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     only ever appends lower-priority candidates. One window per
     segment partition — the partition key is the segment, bounded
     cardinality, unskewed fixture."""
-    from pyspark.sql import Window
 
     quota = F.lit(None).cast("bigint")
     expr = None
@@ -2071,7 +2040,6 @@ def sample_stratified_neyman_vs_proportional(
     centered-moment machinery verbatim. Divisions NULL-guarded for
     zero allocations (structurally impossible for non-degenerate
     strata, guarded anyway). Bounded |strata| table end-to-end."""
-    from pyspark.sql import Window
 
     c = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("stratum"),
@@ -2294,7 +2262,6 @@ def sample_importance_reweighted_mean(
     ~ 9e18 at 100 TB — the edge of int64, documented; shard the sum
     if the corpus grows past it) and the estimate is one guarded
     division. One scan, map-side combinable."""
-    from .helpers import materialize_reduced, phash60
 
     pop = load_table(spark, sf_dir, "orders").select(
         F.round(F.col("o_totalprice") * 100, 0).cast("bigint").alias(

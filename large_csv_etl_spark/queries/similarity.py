@@ -12,20 +12,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from .helpers import fp_sum, materialize_reduced, sql_fp_sum
+from .helpers import (
+    centroid_arrays,
+    centroid_means,
+    fp_sum,
+    materialize_reduced,
+    micro6,
+    phash60,
+    registry,
+    sq_l2,
+    sql_fp_sum,
+)
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 def _dot(a, b):
@@ -620,30 +619,13 @@ def embedding_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec6 = emb.select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
-    ex = vec6.select(
-        "label", F.posexplode("v6").alias("pos", "val6")
+    ex = vec6.withColumnRenamed("label", "clabel").select(
+        "clabel", F.posexplode("v6").alias("pos", "val6")
     )
-    cent = ex.groupBy(F.col("label").alias("clabel"), "pos").agg(
-        F.round(
-            F.sum("val6").cast("double") / F.count("*")
-        ).cast("bigint").alias("cmu")
-    )
-    cent_arr = cent.groupBy("clabel").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cmu"))),
-            lambda s: s["cmu"],
-        ).alias("c6")
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v6"), F.col("c6"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    cent_arr = centroid_arrays(ex, "clabel")
+    d2 = sq_l2(F.col("v6"), F.col("c6"))
     dist = vec6.crossJoin(F.broadcast(cent_arr)).select(
         "vec_id", "label", "clabel", d2.alias("d2")
     )
@@ -1089,38 +1071,16 @@ def sim_ivf_portable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec6 = emb.select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
     corpus = vec6.filter(F.col("vec_id") != 0)
-    ex = corpus.select("label", F.posexplode("v6").alias("pos", "val6"))
-    cent_arr = (
-        ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(
-            F.round(F.sum("val6").cast("double") / F.count("*"))
-            .cast("bigint")
-            .alias("cmu")
-        )
-        .groupBy("clabel")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cmu"))),
-                lambda s: s["cmu"],
-            ).alias("c6")
-        )
+    ex = corpus.withColumnRenamed("label", "clabel").select(
+        "clabel", F.posexplode("v6").alias("pos", "val6")
     )
-
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
+    cent_arr = centroid_arrays(ex, "clabel")
 
     dist = corpus.crossJoin(F.broadcast(cent_arr)).select(
-        "vec_id", "clabel", d2(F.col("v6"), F.col("c6")).alias("d2")
+        "vec_id", "clabel", sq_l2(F.col("v6"), F.col("c6")).alias("d2")
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "clabel")
     assigned = (
@@ -1131,7 +1091,7 @@ def sim_ivf_portable_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = vec6.filter(F.col("vec_id") == 0).select(F.col("v6").alias("q6"))
     probe = (
         cent_arr.crossJoin(F.broadcast(qv))
-        .select("clabel", d2(F.col("c6"), F.col("q6")).alias("qd2"))
+        .select("clabel", sq_l2(F.col("c6"), F.col("q6")).alias("qd2"))
         .orderBy("qd2", "clabel")
         .limit(IVF_PORTABLE_NPROBE)
         .select("clabel")
@@ -1240,7 +1200,6 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     and explained_ratio divides it by trace(G). Eight iterations is a
     deterministic diagnostic direction, not a convergence guarantee —
     the parity contract is exact regardless."""
-    from .helpers import materialize_reduced
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
@@ -1291,7 +1250,6 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = gram.select(F.col("i").alias("pos")).distinct().select(
         "pos", F.lit(1000000).cast("bigint").alias("v_fp")
     )
-    from pyspark.sql import Window
 
     # The L-inf normalizer is a window MAX over the dim-row vector — a
     # single-partition window over <=|dims| rows is the cheap plan here
@@ -1469,28 +1427,20 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     out deterministically in both engines. Seeds = the k smallest
     vec_ids (deterministic, boring on purpose — k-means++ would need a
     sequential RNG chain that can't be graded cross-engine)."""
-    from .helpers import materialize_reduced
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
     vec6 = emb.select(
         "vec_id",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
     cent_arr = materialize_reduced(
         vec6.orderBy("vec_id")
         .limit(KMEANS_K)
         .select(F.col("vec_id").alias("cid"), F.col("v6").alias("c6"))
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v6"), F.col("c6"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_l2(F.col("v6"), F.col("c6"))
     w = Window.partitionBy("vec_id").orderBy("d2", "cid")
 
     def assign(centroids):
@@ -1503,19 +1453,7 @@ def embedding_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     for _ in range(KMEANS_ITERATIONS):
         a = assign(cent_arr).select("cid", F.posexplode("v6").alias("pos", "val6"))
-        cent = a.groupBy("cid", "pos").agg(
-            F.round(F.sum("val6").cast("double") / F.count("*"))
-            .cast("bigint")
-            .alias("cmu")
-        )
-        cent_arr = materialize_reduced(
-            cent.groupBy("cid").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cmu"))),
-                    lambda s: s["cmu"],
-                ).alias("c6")
-            )
-        )
+        cent_arr = materialize_reduced(centroid_arrays(a, "cid"))
     return (
         assign(cent_arr)
         .groupBy(F.col("cid").alias("cluster_id"))
@@ -1569,7 +1507,6 @@ def sim_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets. Two corpus passes (full-dim and prefix-dim scoring), each the
     same broadcast-query TakeOrderedAndProject plan as sim_cosine_topk
     — no pass ever shuffles the corpus."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(
@@ -1654,7 +1591,6 @@ def sim_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-probing, and the overlap join, all under one oracle. Cost is
     two corpus passes (each the broadcast-query TakeOrderedAndProject
     plan) plus a 10x10 join."""
-    from pyspark.sql import Window
 
     exact = QUERIES["sim_cosine_topk"](spark, sf_dir)
     ann = QUERIES["sim_ivf_portable_topk"](spark, sf_dir)
@@ -1756,36 +1692,20 @@ def embedding_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, assignment is a row-local slice + zip_with fold per
     subspace — no corpus explode, no corpus shuffle beyond one
     aggregate."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     vec6 = emb.select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
     corpus = vec6.filter(F.col("vec_id") != 0)
-    ex = corpus.select(
-        "label", F.posexplode("v6").alias("pos", "val6")
-    ).withColumn("sub", F.expr(f"pos div {PQ_SUBDIM}"))
-    sub_cent = (
-        ex.groupBy(F.col("label").alias("clabel"), "sub", "pos")
-        .agg(
-            F.round(F.sum("val6").cast("double") / F.count("*"))
-            .cast("bigint")
-            .alias("cmu")
-        )
-        .groupBy("clabel", "sub")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cmu"))),
-                lambda s: s["cmu"],
-            ).alias("c6")
-        )
+    ex = (
+        corpus.withColumnRenamed("label", "clabel")
+        .select("clabel", F.posexplode("v6").alias("pos", "val6"))
+        .withColumn("sub", F.expr(f"pos div {PQ_SUBDIM}"))
     )
+    sub_cent = centroid_arrays(ex, "clabel", "sub")
     subs = spark.range(PQ_SUBSPACES).select(F.col("id").alias("sub"))
     corpus_sub = corpus.crossJoin(F.broadcast(subs)).select(
         "vec_id",
@@ -1794,15 +1714,8 @@ def embedding_pq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("s6"),
     )
 
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-
     dist = corpus_sub.join(F.broadcast(sub_cent), "sub").select(
-        "vec_id", "sub", "clabel", d2(F.col("s6"), F.col("c6")).alias("d2")
+        "vec_id", "sub", "clabel", sq_l2(F.col("s6"), F.col("c6")).alias("d2")
     )
     w = Window.partitionBy("vec_id", "sub").orderBy("d2", "clabel")
     best = (
@@ -2050,7 +1963,6 @@ def sim_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-query table against the corpus, per-query
     TakeOrderedAndProject-style ranking, exact integer relevance
     counts and single-division metrics."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id").between(1, 10)).select(
@@ -2142,7 +2054,6 @@ def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject heaps); stage 2 touches 50 rows — this
     crossover is exactly why serving stacks quantize the recall stage
     and keep floats only in the rerank."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     t = emb.select(
@@ -2276,7 +2187,6 @@ def sim_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage 1's top-20 (TakeOrderedAndProject); everything iterative runs
     on 20 rows x 4 steps — which is why MMR is served this way in
     production, never over the full corpus."""
-    from .helpers import materialize_reduced
 
     lam = float.fromhex("0x1.6666666666666p-1")  # 0.7 exactly as emitted
     one_minus = float.fromhex("0x1.3333333333333p-2")  # 0.3
@@ -2426,7 +2336,8 @@ def sim_knn_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # |corpus|^2/20 score pass then pays only the dot per pair
     emb_n = emb.select(
         "vec_id", "embedding", "label", _norm(F.col("embedding")).alias("nrm")
-    ).localCheckpoint()
+    )
+    emb_n = materialize_reduced(emb_n)
     q = emb_n.filter(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qv"),
@@ -2559,12 +2470,12 @@ def sim_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (6dp-rounded score, vec_id tie-break). Work: a 20 x |corpus|
     broadcast score pass, per-query top-10 via window (per-partition
     heaps at scale), and a |queries|-bounded label-count join."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_n = emb.select(
         "vec_id", "embedding", "label", _norm(F.col("embedding")).alias("nrm")
-    ).localCheckpoint()
+    )
+    emb_n = materialize_reduced(emb_n)
     q = emb_n.filter(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qv"),
@@ -2679,12 +2590,12 @@ def sim_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     select identical triplets. One broadcast score pass over the corpus
     per anchor batch, two per-anchor top-1 windows (per-partition heaps
     at scale) — the mining plan you shard by anchor at 100 TB."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_n = emb.select(
         "vec_id", "embedding", "label", _norm(F.col("embedding")).alias("nrm")
-    ).localCheckpoint()
+    )
+    emb_n = materialize_reduced(emb_n)
     q = emb_n.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("anchor_id"),
         F.col("embedding").alias("qv"),
@@ -2695,7 +2606,7 @@ def sim_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     cos = _dot(F.col("embedding"), F.col("qv")) / (
         F.col("nrm") * F.col("qnrm")
     )
-    scored = (
+    scored = materialize_reduced(
         emb_n.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("anchor_id"))
         .select(
@@ -2705,7 +2616,6 @@ def sim_triplet_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             F.round(cos, 6).alias("cos_sim"),
         )
-        .localCheckpoint()
     )
     hp = (
         scored.filter(F.col("label") == F.col("a_label"))
@@ -2796,7 +2706,6 @@ def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     one broadcast score pass (|panel| x |corpus|), one per-query top-5
     window, one hash agg on the neighbor id — the same bounded shapes
     as the kNN label eval."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     # precompute each norm ONCE (the fold is the same IEEE value the
@@ -2806,7 +2715,8 @@ def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf0.1
     emb_n = emb.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    ).localCheckpoint()
+    )
+    emb_n = materialize_reduced(emb_n)
     # same vectorized Arrow score pass as sim_hubness_kocc (guide §4.2;
     # bit-identity argued on _cosine_scores_arrow) — the 200-vector
     # panel is the graded bound, collected as metadata
@@ -2894,10 +2804,7 @@ def sim_centroid_drift_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "source"
     )
-    v6 = F.expr(
-        "transform(embedding,"
-        " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-    )
+    v6 = micro6("embedding")
     ex = (
         emb.join(docs, "vec_id")
         .select("source", v6.alias("v6"))
@@ -3126,10 +3033,7 @@ def sim_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     t = emb.select(
         "vec_id",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("x6"),
+        micro6("embedding").alias("x6"),
     )
     t = materialize_reduced(t)
     signs = spark.createDataFrame(_jl_signs(), "p int, d int, s long")
@@ -3141,15 +3045,7 @@ def sim_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = t.alias("a")
     b = t.alias("b")
-    d2o_expr = F.aggregate(
-        F.zip_with(
-            F.col("a.x6"),
-            F.col("b.x6"),
-            lambda x, y: (x - y) * (x - y),
-        ),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    d2o_expr = sq_l2(F.col("a.x6"), F.col("b.x6"))
     d_orig = (
         a.join(b, F.col("b.vec_id") == F.col("a.vec_id") + 1)
         .filter(F.col("a.vec_id") % JL_PAIR_STRIDE == 0)
@@ -3302,38 +3198,16 @@ def sim_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec6 = emb.select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
     corpus = materialize_reduced(vec6.filter(F.col("vec_id") != 0))
-    ex = corpus.select("label", F.posexplode("v6").alias("pos", "val6"))
-    cent_arr = (
-        ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(
-            F.round(F.sum("val6").cast("double") / F.count("*"))
-            .cast("bigint")
-            .alias("cmu")
-        )
-        .groupBy("clabel")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cmu"))),
-                lambda s: s["cmu"],
-            ).alias("c6")
-        )
+    ex = corpus.withColumnRenamed("label", "clabel").select(
+        "clabel", F.posexplode("v6").alias("pos", "val6")
     )
-
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
+    cent_arr = centroid_arrays(ex, "clabel")
 
     dist = corpus.crossJoin(F.broadcast(cent_arr)).select(
-        "vec_id", "clabel", d2(F.col("v6"), F.col("c6")).alias("d2")
+        "vec_id", "clabel", sq_l2(F.col("v6"), F.col("c6")).alias("d2")
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "clabel")
     assigned = (
@@ -3345,7 +3219,7 @@ def sim_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     wq = Window.orderBy("qd2", "clabel")
     qd = (
         cent_arr.crossJoin(F.broadcast(qv))
-        .select("clabel", d2(F.col("c6"), F.col("q6")).alias("qd2"))
+        .select("clabel", sq_l2(F.col("c6"), F.col("q6")).alias("qd2"))
         .withColumn("cell_rank", F.row_number().over(wq))
         .select("clabel", "cell_rank")
     )
@@ -3600,14 +3474,7 @@ def sim_dim_covariance_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
-            F.posexplode(
-                F.transform(
-                    "embedding",
-                    lambda x: F.round(x.cast("double") * 1000000.0, 0).cast(
-                        "bigint"
-                    ),
-                )
-            ).alias("pos0", "val"),
+            F.posexplode(micro6("embedding")).alias("pos0", "val"),
         )
         .select("vec_id", (F.col("pos0") + 1).alias("pos"), "val")
     )
@@ -3720,12 +3587,7 @@ def sim_rank_displacement(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("xd"),
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * 1000000.0, 0).cast(
-                "bigint"
-            ),
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     ).withColumn("maxabs", F.array_max(F.transform("xd", F.abs)))
     m = (
         v.filter(F.col("maxabs") > 0)
@@ -3803,7 +3665,6 @@ def sim_rank_displacement(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rank_panel_pred(prefix: str, mod: int):
     """Deterministic hash query panel: vec_id selected when
     phash60(prefix || vec_id) % mod == 0 (engine-portable)."""
-    from .helpers import phash60
 
     return (
         phash60(F.concat(F.lit(prefix), F.col("vec_id").cast("string")))
@@ -3874,17 +3735,11 @@ def sim_cosine_euclidean_rank_agreement(
     by inner-join semantics (documented; jaccard_top10 = n/(20-n) is
     structurally guarded by n >= 1 there). Scale: panel broadcast x
     corpus scan, two bounded per-query windows."""
-    from .helpers import materialize_reduced
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.select(
         "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * 1000000.0, 0).cast(
-                "bigint"
-            ),
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     ).select(
         "vec_id",
         "v6",
@@ -4016,24 +3871,16 @@ def sim_kmeans_inertia_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-increasing in k by construction on any fixture. Scale: per k,
     each iteration is one broadcast (k x dim) centroid table against a
     corpus scan — the 100 TB k-means plan, run three times."""
-    from .helpers import materialize_reduced
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
     vec6 = emb.select(
         "vec_id",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
     vec6 = materialize_reduced(vec6)
-    d2 = F.aggregate(
-        F.zip_with(F.col("v6"), F.col("c6"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_l2(F.col("v6"), F.col("c6"))
     w = Window.partitionBy("vec_id").orderBy("d2", "cid")
 
     def assign(centroids):
@@ -4058,19 +3905,7 @@ def sim_kmeans_inertia_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             a = assign(cent_arr).select(
                 "cid", F.posexplode("v6").alias("pos", "val6")
             )
-            cent = a.groupBy("cid", "pos").agg(
-                F.round(F.sum("val6").cast("double") / F.count("*"))
-                .cast("bigint")
-                .alias("cmu")
-            )
-            cent_arr = materialize_reduced(
-                cent.groupBy("cid").agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("pos", "cmu"))),
-                        lambda s: s["cmu"],
-                    ).alias("c6")
-                )
-            )
+            cent_arr = materialize_reduced(centroid_arrays(a, "cid"))
         return assign(cent_arr).agg(
             F.lit(k).cast("bigint").alias("k"),
             F.count("*").cast("bigint").alias("n_vectors"),
@@ -4128,10 +3963,7 @@ def sim_norm_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     )
-    v6 = F.transform(
-        "embedding",
-        lambda x: F.round(x.cast("double") * 1000000.0, 0).cast("bigint"),
-    )
+    v6 = micro6("embedding")
     n = emb.select(
         "vec_id",
         "label",
@@ -4234,7 +4066,6 @@ def sim_silhouette_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     max > 0 guard and reported via n_panel vs n_scored. Scale:
     centroid table is |labels| x dim (broadcast); panel cost is
     |panel| x |labels|."""
-    from .helpers import materialize_reduced, phash60
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
@@ -4242,37 +4073,21 @@ def sim_silhouette_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = emb.select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
     v = materialize_reduced(v)
-    cent = (
-        v.select("label", F.posexplode("v6").alias("pos", "val6"))
-        .groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(
-            F.round(F.sum("val6").cast("double") / F.count("*"))
-            .cast("bigint")
-            .alias("cmu")
-        )
-    )
-    cent_arr = cent.groupBy("clabel").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cmu"))),
-            lambda s: s["cmu"],
-        ).alias("c6")
+    cent_arr = centroid_arrays(
+        v.withColumnRenamed("label", "clabel").select(
+            "clabel", F.posexplode("v6").alias("pos", "val6")
+        ),
+        "clabel",
     )
     panel = v.filter(
         phash60(F.concat(F.lit("silq:"), F.col("vec_id").cast("string")))
         % 4
         == 0
     )
-    d2 = F.aggregate(
-        F.zip_with(F.col("v6"), F.col("c6"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
+    d2 = sq_l2(F.col("v6"), F.col("c6"))
     pd = panel.crossJoin(F.broadcast(cent_arr)).select(
         "vec_id", "label", "clabel", d2.alias("d2")
     )
@@ -4350,31 +4165,21 @@ def sim_centroid_distance_matrix(
     """Pairwise label-centroid L2 distance matrix (|labels| choose 2
     rows) — the confusion-risk map: labels whose centroids nearly
     coincide are the ones every nearest-centroid assignment and IVF
-    routing decision will mix up. Centroids are the integer micro-unit
-    rounded means (the Lloyd update formula, shared with the graded
-    k-means/silhouette entries so the three can never disagree on a
-    centroid); pair distances are exact BIGINT sums over the
+    routing decision will mix up. Centroids are ``centroid_means``, the
+    integer micro-unit rounded means that ``centroid_arrays`` packs for
+    the k-means, silhouette and IVF entries: one definition, so they
+    cannot disagree on a centroid; pair distances are exact BIGINT sums over the
     dimension-aligned join of the two centroid tables, one sqrt at the
     end. Everything is bounded by |labels| x dim."""
-    from .helpers import materialize_reduced
 
     v = load_table(spark, sf_dir, "embeddings").filter(
         F.col("embedding").isNotNull()
     ).select(
         "label",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
-    cent = (
-        v.select("label", F.posexplode("v6").alias("pos", "val6"))
-        .groupBy("label", "pos")
-        .agg(
-            F.round(F.sum("val6").cast("double") / F.count("*"))
-            .cast("bigint")
-            .alias("cmu")
-        )
+    cent = centroid_means(
+        v.select("label", F.posexplode("v6").alias("pos", "val6")), "label"
     )
     cent = materialize_reduced(cent)
     a, b = cent.alias("a"), cent.alias("b")
@@ -4477,12 +4282,12 @@ def sim_hubness_kocc(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded histogram (k_occ <= 2000, cubes < 2^63 at any corpus
     size), skew is one fixed double chain with a sigma^2 > 0 guard
     (m2 * sqrt(m2), no fractional pow)."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_n = emb.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    ).localCheckpoint()
+    )
+    emb_n = materialize_reduced(emb_n)
     # the 200-query panel is the graded bound — collect it once (bounded
     # metadata) and score all pairs in one vectorized Arrow pass instead
     # of the interpreted crossJoin fold (guide §4.2; bit-identity argued
@@ -4621,16 +4426,12 @@ def sim_pq_subspace_distortion(
     8x8 and reports WHERE). Same supervised per-label sub-centroid
     codebook and exact 1e-6 micro-unit BIGINT machinery; two guarded
     divisions per row; output bounded at 8 rows."""
-    from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
     vec6 = emb.select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
     corpus = vec6.filter(F.col("vec_id") != 0)
     ex = corpus.select(
@@ -4888,7 +4689,8 @@ def sim_knn_label_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     emb_n = emb.select(
         "vec_id", "embedding", "label", _norm(F.col("embedding")).alias("nrm")
-    ).localCheckpoint()
+    )
+    emb_n = materialize_reduced(emb_n)
     q = emb_n.filter(F.col("vec_id") % 20 == 0).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("qv"),
@@ -5051,39 +4853,17 @@ def sim_ivf_list_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec6 = emb.select(
         "vec_id",
         "label",
-        F.expr(
-            "transform(embedding,"
-            " x -> cast(round(cast(x AS double) * 1000000.0) AS bigint))"
-        ).alias("v6"),
+        micro6("embedding").alias("v6"),
     )
     corpus = vec6.filter(F.col("vec_id") != 0)
-    ex = corpus.select("label", F.posexplode("v6").alias("pos", "val6"))
-    cent_arr = (
-        ex.groupBy(F.col("label").alias("clabel"), "pos")
-        .agg(
-            F.round(F.sum("val6").cast("double") / F.count("*"))
-            .cast("bigint")
-            .alias("cmu")
-        )
-        .groupBy("clabel")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cmu"))),
-                lambda s: s["cmu"],
-            ).alias("c6")
-        )
+    ex = corpus.withColumnRenamed("label", "clabel").select(
+        "clabel", F.posexplode("v6").alias("pos", "val6")
     )
-
-    def d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
+    cent_arr = centroid_arrays(ex, "clabel")
 
     dist = materialize_reduced(
         corpus.crossJoin(F.broadcast(cent_arr)).select(
-            "vec_id", "clabel", d2(F.col("v6"), F.col("c6")).alias("d2")
+            "vec_id", "clabel", sq_l2(F.col("v6"), F.col("c6")).alias("d2")
         )
     )
     w = Window.partitionBy("vec_id").orderBy("d2", "clabel")

@@ -19,8 +19,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES = {}
-ORACLES = {}
+from .helpers import materialize_reduced, registry
+
+QUERIES, ORACLES, _register = registry()
 
 # Upper bound on the adaptive state-partition count — a 100 TB/day
 # deployment with a multi-hour watermark horizon derives thousands of
@@ -79,9 +80,11 @@ def _adaptive_state_partitions(
 
 @contextlib.contextmanager
 def _checkpoint(prefix: str):
-    """A throwaway checkpoint directory, removed once the drain that used
-    it has terminated: the drained rows live in the memory sink or the
-    foreachBatch capture, never in the checkpoint."""
+    """A throwaway directory, removed when the block exits. For a
+    checkpoint that is once the drain that used it has terminated: the
+    drained rows live in the memory sink or the foreachBatch capture,
+    never in the checkpoint. A parquet store or capture is removed only
+    after the result read from it is materialized."""
     ckpt = tempfile.mkdtemp(prefix=prefix)
     try:
         yield ckpt
@@ -138,10 +141,7 @@ def _q(name, oracle=None, adaptive_state=True):
                 else:
                     spark.conf.unset(key)
 
-        QUERIES[name] = wrapped
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return wrapped
+        return _register(name, oracle)(wrapped)
 
     return deco
 
@@ -522,29 +522,27 @@ def streaming_upsert_latest_event(
     format (Delta/Iceberg), same semantics."""
     from ..streaming import upsert_maintenance_stream
 
-    store = tempfile.mkdtemp(prefix="upsert_store_") + "/store"
-    with _checkpoint("ckpt_upsert_") as ckpt:
-        upsert_maintenance_stream(
-            spark,
-            sf_dir,
-            store,
-            ckpt,
-            keys=["user_id"],
-            ord_cols=["ts", "event_id"],
-            glob="events.parquet",
-        )
-    out = (
-        spark.read.parquet(store)
-        .select(
+    with _checkpoint("upsert_store_") as root:
+        store = root + "/store"
+        with _checkpoint("ckpt_upsert_") as ckpt:
+            upsert_maintenance_stream(
+                spark,
+                sf_dir,
+                store,
+                ckpt,
+                keys=["user_id"],
+                ord_cols=["ts", "event_id"],
+                glob="events.parquet",
+            )
+        out = spark.read.parquet(store).select(
             "user_id",
             F.col("event_id").alias("last_event_id"),
             F.col("ts").alias("last_ts"),
             F.col("event_type").alias("last_event_type"),
         )
-    )
-    # materialize before the temp dirs can be cleaned up by the OS; the
-    # store itself is tiny (one row per user)
-    return out.localCheckpoint()
+        # materialize before the store is removed; it is tiny (one row
+        # per user)
+        return materialize_reduced(out)
 
 
 # Left-outer drain scope: watermark delay + join horizon, in microseconds.
@@ -673,51 +671,52 @@ def streaming_update_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded recovered table, not the stream."""
     from ..streaming import read_events_stream
 
-    sink_dir = tempfile.mkdtemp(prefix="upd_topk_") + "/capture"
-    # repartition(1) guarantees a footer-bearing part file even for the
-    # zero-row seed (an empty 0-partition write leaves only _SUCCESS and
-    # the read-back cannot infer a schema)
-    spark.createDataFrame(
-        [], "user_id bigint, n_events bigint"
-    ).repartition(1).write.mode("overwrite").parquet(sink_dir)
-    counts = (
-        read_events_stream(spark, sf_dir, glob="events.parquet")
-        .groupBy("user_id")
-        .agg(F.count("*").cast("bigint").alias("n_events"))
-    )
-
-    def _capture(batch_df, batch_id):
-        batch_df.select("user_id", "n_events").write.mode("append").parquet(
-            sink_dir
+    with _checkpoint("upd_topk_") as root:
+        sink_dir = root + "/capture"
+        # repartition(1) guarantees a footer-bearing part file even for the
+        # zero-row seed (an empty 0-partition write leaves only _SUCCESS and
+        # the read-back cannot infer a schema)
+        spark.createDataFrame(
+            [], "user_id bigint, n_events bigint"
+        ).repartition(1).write.mode("overwrite").parquet(sink_dir)
+        counts = (
+            read_events_stream(spark, sf_dir, glob="events.parquet")
+            .groupBy("user_id")
+            .agg(F.count("*").cast("bigint").alias("n_events"))
         )
 
-    with _checkpoint("ckpt_upd_topk_") as ckpt:
-        q = (
-            counts.writeStream.outputMode("update")
-            .foreachBatch(_capture)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    state = (
-        spark.read.parquet(sink_dir)
-        .groupBy("user_id")
-        .agg(F.max("n_events").cast("bigint").alias("n_events"))
-    )
-    from pyspark.sql import Window
+        def _capture(batch_df, batch_id):
+            batch_df.select("user_id", "n_events").write.mode(
+                "append"
+            ).parquet(sink_dir)
 
-    ranked = state.select(
-        "user_id",
-        "n_events",
-        F.row_number()
-        .over(Window.orderBy(F.col("n_events").desc(), "user_id"))
-        .cast("bigint")
-        .alias("rnk"),
-    )
-    out = ranked.filter(F.col("rnk") <= 10)
-    # materialize before temp cleanup; 10 rows
-    return out.localCheckpoint()
+        with _checkpoint("ckpt_upd_topk_") as ckpt:
+            q = (
+                counts.writeStream.outputMode("update")
+                .foreachBatch(_capture)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        state = (
+            spark.read.parquet(sink_dir)
+            .groupBy("user_id")
+            .agg(F.max("n_events").cast("bigint").alias("n_events"))
+        )
+        from pyspark.sql import Window
+
+        ranked = state.select(
+            "user_id",
+            "n_events",
+            F.row_number()
+            .over(Window.orderBy(F.col("n_events").desc(), "user_id"))
+            .cast("bigint")
+            .alias("rnk"),
+        )
+        out = ranked.filter(F.col("rnk") <= 10)
+        # materialize before the capture is removed; 10 rows
+        return materialize_reduced(out)
 
 
 @_q(
@@ -910,51 +909,52 @@ def streaming_update_mode_user_totals(
     O(|users|) at any scale. Value totals on the exact cents lattice."""
     from ..streaming import read_events_stream
 
-    sink_dir = tempfile.mkdtemp(prefix="upd_totals_") + "/capture"
-    spark.createDataFrame(
-        [], "user_id bigint, n_events bigint, total_cents bigint,"
-        " batch_id bigint"
-    ).repartition(1).write.mode("overwrite").parquet(sink_dir)
-    totals = (
-        read_events_stream(spark, sf_dir, glob="events.parquet")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_events"),
-            F.sum(
-                F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0)
+    with _checkpoint("upd_totals_") as root:
+        sink_dir = root + "/capture"
+        spark.createDataFrame(
+            [], "user_id bigint, n_events bigint, total_cents bigint,"
+            " batch_id bigint"
+        ).repartition(1).write.mode("overwrite").parquet(sink_dir)
+        totals = (
+            read_events_stream(spark, sf_dir, glob="events.parquet")
+            .groupBy("user_id")
+            .agg(
+                F.count("*").cast("bigint").alias("n_events"),
+                F.sum(
+                    F.round(F.coalesce(F.col("value"), F.lit(0.0)) * 100, 0)
+                    .cast("bigint")
+                )
                 .cast("bigint")
+                .alias("total_cents"),
             )
+        )
+
+        def _capture(batch_df, batch_id):
+            batch_df.select(
+                "user_id",
+                "n_events",
+                "total_cents",
+                F.lit(batch_id).cast("bigint").alias("batch_id"),
+            ).write.mode("append").parquet(sink_dir)
+
+        with _checkpoint("ckpt_upd_totals_") as ckpt:
+            q = (
+                totals.writeStream.outputMode("update")
+                .foreachBatch(_capture)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        cap = spark.read.parquet(sink_dir)
+        out = cap.groupBy("user_id").agg(
+            F.max_by("n_events", "batch_id").cast("bigint").alias("n_events"),
+            F.max_by("total_cents", "batch_id")
             .cast("bigint")
             .alias("total_cents"),
         )
-    )
-
-    def _capture(batch_df, batch_id):
-        batch_df.select(
-            "user_id",
-            "n_events",
-            "total_cents",
-            F.lit(batch_id).cast("bigint").alias("batch_id"),
-        ).write.mode("append").parquet(sink_dir)
-
-    with _checkpoint("ckpt_upd_totals_") as ckpt:
-        q = (
-            totals.writeStream.outputMode("update")
-            .foreachBatch(_capture)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    cap = spark.read.parquet(sink_dir)
-    out = cap.groupBy("user_id").agg(
-        F.max_by("n_events", "batch_id").cast("bigint").alias("n_events"),
-        F.max_by("total_cents", "batch_id")
-        .cast("bigint")
-        .alias("total_cents"),
-    )
-    # materialize before the temp capture dir could be cleaned; |users|
-    return out.localCheckpoint()
+        # materialize before the capture is removed; |users| rows
+        return materialize_reduced(out)
 
 
 @_q(

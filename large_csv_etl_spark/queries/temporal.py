@@ -27,20 +27,9 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from .events import session_frame
-from .helpers import materialize_reduced
+from .helpers import materialize_reduced, registry
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 @_q(

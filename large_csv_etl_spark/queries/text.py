@@ -25,6 +25,7 @@ from .helpers import (
     fp_sum,
     materialize_reduced,
     phash60,
+    registry,
     sql_davg,
     sql_phash60,
     sql_tvd_expr,
@@ -32,18 +33,7 @@ from .helpers import (
     tvd_from_fixed_point,
 )
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 # Tokenization contract shared by Spark and the oracle: split on runs of

@@ -14,20 +14,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from .helpers import DEC, dsum, materialize_reduced, sql_dsum
+from .helpers import DEC, dsum, materialize_reduced, registry, sql_dsum
 
-QUERIES = {}
-ORACLES = {}
-
-
-def _q(name, oracle=None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+QUERIES, ORACLES, _q = registry()
 
 
 @_q(
@@ -698,13 +687,7 @@ def window_kaufman_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable scan; the unpartitioned ORDER BY day window is
     safe because the reduced series is tiny at any corpus scale (shard
     by calendar year first if it ever were not)."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.to_date("o_orderdate").alias("day"),
-        F.col("o_totalprice").cast(DEC).alias("price"),
-    )
-    daily = o.groupBy("day").agg(
-        (F.sum("price") * 100).cast("bigint").alias("revenue_cents")
-    )
+    daily = daily_revenue_cents(spark, sf_dir)
     wday = Window.orderBy("day")
     seq = daily.select(
         "day",
@@ -785,13 +768,7 @@ def window_rsi_14(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable; flat windows pin to the neutral 50). Companion to the
     Kaufman efficiency ratio: same exact-cents series, same
     |days|-bounded frame windows, a different momentum diagnostic."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.to_date("o_orderdate").alias("day"),
-        F.col("o_totalprice").cast(DEC).alias("price"),
-    )
-    daily = o.groupBy("day").agg(
-        (F.sum("price") * 100).cast("bigint").alias("revenue_cents")
-    )
+    daily = daily_revenue_cents(spark, sf_dir)
     wday = Window.orderBy("day")
     seq = daily.select(
         "day",
@@ -874,13 +851,7 @@ def window_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-cents series family (Kaufman ER, RSI): same one-scan day
     reduction, two window lags, and a 6-column single-row census whose
     only float op is the final rate division."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.to_date("o_orderdate").alias("day"),
-        F.col("o_totalprice").cast(DEC).alias("price"),
-    )
-    daily = o.groupBy("day").agg(
-        (F.sum("price") * 100).cast("bigint").alias("revenue_cents")
-    )
+    daily = daily_revenue_cents(spark, sf_dir)
     wday = Window.orderBy("day")
     seq = daily.select(
         (
@@ -2483,6 +2454,20 @@ def daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cents")
         )
+    )
+
+
+def daily_revenue_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Daily revenue in cents summed exactly as DECIMAL, then scaled:
+    (sum of prices) * 100, where ``daily_cents`` sums per-order rounded
+    cents. Shared by the momentum diagnostics. Returns
+    (day, revenue_cents)."""
+    o = load_table(spark, sf_dir, "orders").select(
+        F.to_date("o_orderdate").alias("day"),
+        F.col("o_totalprice").cast(DEC).alias("price"),
+    )
+    return o.groupBy("day").agg(
+        (F.sum("price") * 100).cast("bigint").alias("revenue_cents")
     )
 
 
@@ -4521,13 +4506,7 @@ def window_connors_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streak budget: |streak| <= |days|, every sum int64-trivial. One
     day rollup + five ordered windows over the bounded spine, no
     joins."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.to_date("o_orderdate").alias("day"),
-        F.col("o_totalprice").cast(DEC).alias("price"),
-    )
-    daily = o.groupBy("day").agg(
-        (F.sum("price") * 100).cast("bigint").alias("revenue_cents")
-    )
+    daily = daily_revenue_cents(spark, sf_dir)
     w = Window.orderBy("day")
     seq = daily.select(
         "day",

@@ -444,3 +444,38 @@ def test_tws_user_totals_matches_batch(spark, sf_dir, tmp_path):
         gn, gtv = latest[u]
         assert gn == n
         assert abs(gtv - tv) <= 1e-6 * max(1.0, abs(tv))
+
+
+@pytest.mark.parametrize(
+    "name, prefix",
+    [
+        ("streaming_upsert_latest_event", "upsert_store_"),
+        ("streaming_update_mode_topk", "upd_topk_"),
+        ("streaming_update_mode_user_totals", "upd_totals_"),
+    ],
+)
+def test_parquet_sink_entries_remove_their_temp_dir(spark, name, prefix):
+    """The foreachBatch/upsert entries stage their sink in a temp dir,
+    read it back and return a materialized frame: the dir is gone once
+    the call returns, and the frame still holds the oracle's rows."""
+    import os
+    import tempfile
+
+    import duckdb
+
+    from large_csv_etl_spark.queries import all_oracles, all_queries
+
+    def staged():
+        return {
+            d for d in os.listdir(tempfile.gettempdir()) if d.startswith(prefix)
+        }
+
+    before = staged()
+    df = all_queries()[name](spark, SF_DIR)
+    assert staged() - before == set()
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW events AS SELECT * FROM '{SF_DIR}/events.parquet'")
+    want = con.sql(all_oracles()[name])
+    got = [tuple(r) for r in df.select(*want.columns).collect()]
+    assert sorted(got) == sorted(want.fetchall())
