@@ -116,6 +116,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     rebuild. The dtype gate below handles both. Either way both engines
     see bit-identical micros timestamps (nanos truncation matches DuckDB's
     ``CAST(ts_ns AS TIMESTAMP)``).
+
+    The scan gets Spark's own inferred schema through
+    ``inferred_parquet_schema``, so the footer inference runs once per
+    version of the file, not on every call.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
@@ -128,21 +132,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # straddling a DST transition diverge from the oracle's naive
         # epoch arithmetic.
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = spark.read.parquet(path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        return df
-    return spark.read.parquet(path)
+    df = spark.read.schema(inferred_parquet_schema(spark, path)).parquet(path)
+    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df
 
 
 # Spark's own inferred schema per parquet source, remembered with the
 # version of the files it was inferred from:
 # {(absolute path, glob, confs): (file versions, schema JSON)}.
 _INFERRED: dict = {}
-# The confs that change what parquet schema inference returns for ``ts``.
+# The confs that change what parquet schema inference returns.
 _INFERENCE_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
 )
 
 

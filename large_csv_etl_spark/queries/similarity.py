@@ -6,6 +6,8 @@ cost per query goes from |corpus| to |bucket|).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -42,7 +44,7 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def _cosine_scores_arrow(emb_n: DataFrame, qrows) -> DataFrame:
+def _cosine_scores_arrow(emb_n: DataFrame, qrows, top_k=None) -> DataFrame:
     """All-pairs raw cosine scores against a bounded query panel via ONE
     mapInArrow pass — the vectorized replacement for
     crossJoin(broadcast(q)) + the interpreted ``_dot`` fold (guide §4.2:
@@ -65,10 +67,20 @@ def _cosine_scores_arrow(emb_n: DataFrame, qrows) -> DataFrame:
     ``emb_n`` must carry (vec_id, embedding, nrm); ``qrows`` is the
     collected bounded panel [(q_id, qv, qnrm)] — panel size is part of
     each caller's graded contract (e.g. 200 vectors), so collecting it
-    is bounded metadata, not data. Self-pairs are NOT filtered here —
-    callers keep their vec_id != q_id filter so the plan semantics stay
-    side-by-side comparable. Returns (q_id, vec_id, cos_sim) with
+    is bounded metadata, not data. Returns (q_id, vec_id, cos_sim) with
     cos_sim raw (callers apply their own rounding in Spark, unchanged).
+
+    Without ``top_k`` every pair is returned, self-pairs included.
+    With ``top_k`` set, each Arrow batch drops its self-pairs
+    (vec_id == q_id) and, per query, every score more than 2e-6 below
+    the batch's ``top_k``-th best score; a NaN score ranks as +inf,
+    because Spark's DESC order puts NaN first. What is kept is a
+    superset of each query's top-k under the callers'
+    ``round(cos_sim, 6) DESC, vec_id`` order: round-to-6dp is monotone
+    and moves a value by at most 0.5e-6, so a dropped score rounds
+    strictly below the k scores of its batch that reach the k-th best,
+    and k rows of its own query rank ahead of it whatever the vec_id
+    tie-break. The callers' window still picks the exact top-k.
     """
     q_ids = [int(r["q_id"]) for r in qrows]
     q_vecs = [[float(x) for x in r["qv"]] for r in qrows]
@@ -103,11 +115,25 @@ def _cosine_scores_arrow(emb_n: DataFrame, qrows) -> DataFrame:
                 # left-to-right fold (see docstring)
                 acc += emb[:, j : j + 1] * qm[:, j]
             cos = acc / (nrm[:, None] * qn[None, :])
+            if top_k is None:
+                rows = np.repeat(np.arange(n), nq)
+                cols = np.tile(np.arange(nq), n)
+            else:
+                # rank key: NaN as +inf (first under DESC), self-pairs
+                # as -inf so they never count toward the k-th best
+                key = np.where(np.isnan(cos), np.inf, cos)
+                self_pair = vid[:, None] == qi[None, :]
+                key[self_pair] = -np.inf
+                keep = ~self_pair
+                if n > top_k:
+                    kth = -np.partition(-key, top_k - 1, axis=0)[top_k - 1]
+                    keep &= key >= kth - 2e-6
+                rows, cols = np.nonzero(keep)
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(np.tile(qi, n), type=pa.int64()),
-                    pa.array(np.repeat(vid, nq), type=pa.int64()),
-                    pa.array(cos.ravel(), type=pa.float64()),
+                    pa.array(qi[cols], type=pa.int64()),
+                    pa.array(vid[rows], type=pa.int64()),
+                    pa.array(cos[rows, cols], type=pa.float64()),
                 ],
                 schema=out_schema,
             )
@@ -2721,10 +2747,9 @@ def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bit-identity argued on _cosine_scores_arrow) — the 200-vector
     # panel is the graded bound, collected as metadata
     qrows = _hubness_panel(emb_n, "sim_hubness_audit")
-    scored = (
-        _cosine_scores_arrow(emb_n, qrows)
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", F.round(F.col("cos_sim"), 6).alias("cos_sim"))
+    # the kernel drops self-pairs and keeps a superset of each top-5
+    scored = _cosine_scores_arrow(emb_n, qrows, top_k=5).select(
+        "q_id", "vec_id", F.round(F.col("cos_sim"), 6).alias("cos_sim")
     )
     ranked = scored.withColumn(
         "rn",
@@ -4278,10 +4303,13 @@ def sim_hubness_kocc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar hubness measure (positive skew = hubby space;
     ROADMAP_r14 #32 — the audit entry shows the ten biggest hubs,
     this shows the whole shape the skew summarizes). Same 6dp cosine /
-    vec_id tie-break contract; moments are exact BIGINT sums over the
-    bounded histogram (k_occ <= 2000, cubes < 2^63 at any corpus
-    size), skew is one fixed double chain with a sigma^2 > 0 guard
-    (m2 * sqrt(m2), no fractional pow)."""
+    vec_id tie-break contract. The histogram is bounded (k_occ <= 200,
+    the panel size, so at most 200 nonzero rows), so it is collected
+    and finished on the driver: the zero mass comes from one count of
+    the corpus, the moments are the oracle's exact BIGINT sums (cubes
+    < 2^63 at any corpus size) and the skew is its fixed double chain
+    with a sigma^2 > 0 guard (m2 * sqrt(m2), no fractional pow),
+    evaluated in the same order in Python."""
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_n = emb.select(
@@ -4293,10 +4321,9 @@ def sim_hubness_kocc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the interpreted crossJoin fold (guide §4.2; bit-identity argued
     # on _cosine_scores_arrow)
     qrows = _hubness_panel(emb_n, "sim_hubness_kocc")
-    scored = (
-        _cosine_scores_arrow(emb_n, qrows)
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id", F.round(F.col("cos_sim"), 6).alias("cos_sim"))
+    # the kernel drops self-pairs and keeps a superset of each top-10
+    scored = _cosine_scores_arrow(emb_n, qrows, top_k=10).select(
+        "q_id", "vec_id", F.round(F.col("cos_sim"), 6).alias("cos_sim")
     )
     ranked = scored.withColumn(
         "rn",
@@ -4311,51 +4338,43 @@ def sim_hubness_kocc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id")
         .agg(F.count("*").cast("bigint").alias("k_occ"))
     )
-    nz = kocc.groupBy("k_occ").agg(
-        F.count("*").cast("bigint").alias("n_vectors")
+    # k_occ <= |panel|, so the histogram has at most HUBNESS_PANEL
+    # nonzero rows; one row past that bound aborts the query
+    nz = (
+        kocc.groupBy("k_occ")
+        .agg(F.count("*").cast("bigint").alias("n_vectors"))
+        .limit(HUBNESS_PANEL + 1)
+        .collect()
     )
-    nz = materialize_reduced(nz)
-    total = emb.agg(F.count("*").cast("bigint").alias("n_total"))
-    zero = (
-        total.crossJoin(
-            F.broadcast(
-                nz.agg(
-                    F.coalesce(F.sum("n_vectors"), F.lit(0))
-                    .cast("bigint")
-                    .alias("n_in")
-                )
-            )
+    if len(nz) > HUBNESS_PANEL:
+        raise ValueError(
+            f"sim_hubness_kocc: more than {HUBNESS_PANEL} distinct k_occ "
+            f"values; the driver-side histogram is bounded by the panel"
         )
-        .select(
-            F.lit(0).cast("bigint").alias("k_occ"),
-            (F.col("n_total") - F.col("n_in"))
-            .cast("bigint")
-            .alias("n_vectors"),
+    hist = [(r["k_occ"], r["n_vectors"]) for r in nz]
+    hist.append((0, emb_n.count() - sum(c for _, c in hist)))
+    hist = [(k, c) for k, c in hist if c > 0]
+    # the oracle's BIGINT moment sums, then its double chain in the same
+    # operation order (int -> double and sqrt are correctly rounded in
+    # Python and the JVM alike, so the skew is bit-identical)
+    n = sum(c for _, c in hist)
+    s1 = sum(k * c for k, c in hist)
+    s2 = sum(k * k * c for k, c in hist)
+    s3 = sum(k * k * k * c for k, c in hist)
+    skew = None
+    if n > 0:
+        mu = float(s1) / float(n)
+        m2 = float(s2) / float(n) - mu * mu
+        m3 = (
+            float(s3) / float(n)
+            - 3.0 * mu * (float(s2) / float(n))
+            + 2.0 * mu * mu * mu
         )
-    )
-    hist = nz.unionByName(zero).filter(F.col("n_vectors") > 0)
-    hist = materialize_reduced(hist)
-    k = F.col("k_occ")
-    m = hist.agg(
-        F.sum("n_vectors").cast("bigint").alias("n"),
-        F.sum(k * F.col("n_vectors")).cast("bigint").alias("s1"),
-        F.sum(k * k * F.col("n_vectors")).cast("bigint").alias("s2"),
-        F.sum(k * k * k * F.col("n_vectors")).cast("bigint").alias("s3"),
-    )
-    mu = F.col("s1").cast("double") / F.col("n")
-    m2 = F.col("s2").cast("double") / F.col("n") - mu * mu
-    m3 = (
-        F.col("s3").cast("double") / F.col("n")
-        - 3.0 * mu * (F.col("s2").cast("double") / F.col("n"))
-        + 2.0 * mu * mu * mu
-    )
-    sk = m.select(
-        F.when((F.col("n") > 0) & (m2 > 0), m3 / (m2 * F.sqrt(m2))).alias(
-            "kocc_skewness"
-        )
-    )
-    return hist.crossJoin(F.broadcast(sk)).select(
-        "k_occ", "n_vectors", "kocc_skewness"
+        if m2 > 0:
+            skew = m3 / (m2 * math.sqrt(m2))
+    return spark.createDataFrame(
+        [(k, c, skew) for k, c in hist],
+        "k_occ bigint, n_vectors bigint, kocc_skewness double",
     )
 
 
