@@ -104,34 +104,26 @@ def read_transactions_csv(
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet scan for one driver test table.
+    """Parquet scan for one driver test table. It writes no session conf.
 
     ``events.parquet`` has shipped ``ts`` two ways across driver
-    revisions: parquet TIMESTAMP(NANOS) — which Spark's reader rejects
-    outright (PARQUET_TYPE_ILLEGAL), so it is read as int64 via the legacy
-    conf and rebuilt to a micros TimestampType with integer division
-    (``div`` — a double division would lose precision above 2^53, and
-    epoch-nanos are ~1.7e18) — and plain TIMESTAMP(MICROS) without
-    isAdjustedToUTC, which reads directly as TIMESTAMP_NTZ and needs no
-    rebuild. The dtype gate below handles both. Either way both engines
-    see bit-identical micros timestamps (nanos truncation matches DuckDB's
-    ``CAST(ts_ns AS TIMESTAMP)``).
+    revisions: parquet TIMESTAMP(NANOS), which Spark infers only as int64
+    (``nanosAsLong``, set in ``inferred_parquet_schema``'s own session)
+    and which is rebuilt here to a micros TimestampType with integer
+    division (``div`` — a double division would lose precision above
+    2^53, and epoch-nanos are ~1.7e18); and plain TIMESTAMP(MICROS)
+    without isAdjustedToUTC, which reads as TIMESTAMP_NTZ and is returned
+    as is. Either way both engines see bit-identical micros timestamps
+    (nanos truncation matches DuckDB's ``CAST(ts_ns AS TIMESTAMP)``).
+    Nothing here converts through a timezone: the NTZ->TIMESTAMP casts
+    live in the registry builders, which run under ``_tz_invariant``'s
+    UTC pin.
 
     The scan gets Spark's own inferred schema through
     ``inferred_parquet_schema``, so the footer inference runs once per
     version of the file, not on every call.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Batch consumers cast the NTZ ts to TIMESTAMP at strict call
-        # sites (unix_micros etc.); that cast is a pure reinterpretation
-        # ONLY under a UTC session. The driver harness builds a vanilla
-        # session that never set the timezone, so pin it here — exactly
-        # as streaming.read_events_stream does — or inter-event gaps
-        # straddling a DST transition diverge from the oracle's naive
-        # epoch arithmetic.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.schema(inferred_parquet_schema(spark, path)).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
@@ -142,9 +134,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # version of the files it was inferred from:
 # {(absolute path, glob, confs): (file versions, schema JSON)}.
 _INFERRED: dict = {}
-# The confs that change what parquet schema inference returns.
+# The caller's confs that change what parquet schema inference returns.
+# ``nanosAsLong`` is not one of them: inference always runs with it on.
 _INFERENCE_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.parquet.binaryAsString",
     "spark.sql.parquet.int96AsTimestamp",
@@ -185,13 +177,24 @@ def inferred_parquet_schema(
     files instead of once per call. A file rewritten in place (a new
     mtime or size) infers again; so does a path that cannot be listed
     locally, on every call. Each call gets its own ``StructType`` (they
-    are mutable), rebuilt from the remembered JSON."""
+    are mutable), rebuilt from the remembered JSON.
+
+    Inference runs in a child session (``newSession``) carrying the
+    caller's ``_INFERENCE_CONFS`` plus ``nanosAsLong``, so that a
+    TIMESTAMP(NANOS) column infers as int64 instead of failing
+    (PARQUET_TYPE_ILLEGAL) while the caller's conf is left alone. An
+    explicit schema reads such a column as int64 with that conf unset."""
     confs = tuple(spark.conf.get(c, None) for c in _INFERENCE_CONFS)
     key = (os.path.abspath(path), glob, confs)
     versions = _file_versions(path, glob)
     hit = _INFERRED.get(key)
     if not (versions and hit and hit[0] == versions):
-        reader = spark.read
+        child = spark.newSession()
+        for c, v in zip(_INFERENCE_CONFS, confs):
+            if v is not None:
+                child.conf.set(c, v)
+        child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        reader = child.read
         if glob:
             reader = reader.option("pathGlobFilter", glob)
         hit = (versions, reader.parquet(path).schema.json())

@@ -29,7 +29,7 @@ Skew guard: with pathological value skew a needed bucket can still be
 huge (every row the same price). ``max_fetch`` bounds the final fetch;
 past it the function falls back to the built-in aggregate, trading the
 known single-merge cost for unconditional correctness. The fetch itself
-is Arrow-batched (``toPandas`` into a numpy array, ~12 bytes/row at the
+is Arrow-batched (``toArrow`` into a numpy array, ~12 bytes/row at the
 1M default — a couple dozen MB against the default 1g
 ``spark.driver.maxResultSize``), never a collect() of Python Row
 objects whose ~100x per-row overhead would balloon the driver long
@@ -117,25 +117,14 @@ def exact_quantiles(
 
     # Arrow-batched fetch: double conversion here is the same conversion
     # the built-in percentile's interpolation applies, and it is monotone,
-    # so in-bucket rank selection is unchanged. The Arrow toggle is scoped
-    # to this one conversion (save/restore) — permanently flipping it
-    # would change toPandas() semantics for every later caller in the
-    # session as a hidden side effect.
-    conf = df.sparkSession.conf
-    arrow_key = "spark.sql.execution.arrow.pyspark.enabled"
-    prev_arrow = conf.get(arrow_key, None)
-    conf.set(arrow_key, "true")
-    try:
-        pdf = (
-            vals.select(F.col("v").cast("double").alias("v"), bucket.alias("b"))
-            .filter(F.col("b").isin([int(b) for b in needed]))
-            .toPandas()
-        )
-    finally:
-        if prev_arrow is None:
-            conf.unset(arrow_key)
-        else:
-            conf.set(arrow_key, prev_arrow)
+    # so in-bucket rank selection is unchanged. ``toArrow`` is Arrow
+    # whatever the session's ``arrow.pyspark.enabled`` says.
+    pdf = (
+        vals.select(F.col("v").cast("double").alias("v"), bucket.alias("b"))
+        .filter(F.col("b").isin([int(b) for b in needed]))
+        .toArrow()
+        .to_pandas()
+    )
     by_bucket: dict[int, np.ndarray] = {
         int(b): np.sort(g["v"].to_numpy()) for b, g in pdf.groupby("b")
     }

@@ -142,20 +142,26 @@ GRADED_PRIORITY = [
 def _tz_invariant(fn: Callable[[SparkSession, str], DataFrame]):
     """Make a registry entry's OUTPUT independent of the host timezone.
 
-    Two OS-TZ leaks exist at the Python collect boundary and nowhere
-    else (query semantics are already UTC-pinned at the reader call
-    sites): (1) a vanilla session defaults ``spark.sql.session.timeZone``
-    to the JVM zone, which shifts any DATE->TIMESTAMP / string parse
-    inside a plan; (2) PySpark renders instant-TIMESTAMP columns through
-    the OS zone in ``collect()``/``toPandas()`` regardless of session
-    timezone, while the DuckDB oracle returns naive UTC wall times —
-    measured under TZ=Asia/Kolkata, every graded output carrying an
-    instant TIMESTAMP read +05:30 off its oracle. So: pin the session
+    Two OS-TZ leaks exist: (1) a vanilla session defaults
+    ``spark.sql.session.timeZone`` to the JVM zone, which shifts any
+    DATE->TIMESTAMP / string parse inside a plan, including the builders'
+    NTZ->TIMESTAMP casts of the events ``ts`` (the readers write no conf
+    and convert through no zone); (2) PySpark renders instant-TIMESTAMP
+    columns through the OS zone in ``collect()``/``toPandas()``
+    regardless of session timezone, while the DuckDB oracle returns
+    naive UTC wall times — measured under TZ=Asia/Kolkata, every graded
+    output carrying an instant TIMESTAMP read +05:30 off its oracle. So: pin the session
     zone, and surface instant TIMESTAMP outputs as TIMESTAMP_NTZ (the
     cast happens under the UTC pin, so the wall time IS the UTC
     instant). On a UTC host both changes are value-identical no-ops,
     and the harness canonicalizes tz flavors of timestamp together
     (round-2 evidence), so types hash the same.
+
+    The pin is the one write to the caller's session conf on a registry
+    path. It stays on the caller's session because ``collect`` runs after
+    this wrapper returns (a child session per call measured about 50 ms
+    more per call), and every writer writes the same value, so
+    concurrent callers do not race.
     """
     from functools import wraps
 

@@ -684,9 +684,6 @@ def grouping_sets_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame
     """GROUPING SETS — the general form behind rollup/cube: exactly the
     requested aggregation levels, one pass, partial-agg per level (Spark
     expands then map-side combines; no per-level rescan)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "orders_grouping_sets"
-    )
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
@@ -694,10 +691,11 @@ def grouping_sets_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame
                CAST(SUM(CAST(o_totalprice AS DECIMAL(30,4))) AS DOUBLE)
                  AS total_price,
                grouping_id(o_orderstatus, o_orderpriority) AS gid
-        FROM orders_grouping_sets
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
                                 (o_orderstatus), ())
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -2138,29 +2136,27 @@ def join_not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     implements the standard, and the docstring is the migration note:
     rewrite NOT IN as NOT EXISTS (Spark plans both as the same
     null-aware anti join, so there is no performance excuse)."""
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    cust.select(
-        F.when(F.col("c_custkey") % 100 == 0, None)
-        .otherwise(F.col("c_custkey"))
-        .alias("k")
-    ).createOrReplaceTempView("probe_nin")
-    orders.createOrReplaceTempView("orders_nin")
-    return load_table(spark, sf_dir, "orders").sparkSession.sql(
+    return spark.sql(
         """
         SELECT
-          (SELECT CAST(COUNT(*) AS BIGINT) FROM orders_nin
-           WHERE o_custkey NOT IN (SELECT k FROM probe_nin))
+          (SELECT CAST(COUNT(*) AS BIGINT) FROM {orders}
+           WHERE o_custkey NOT IN (SELECT k FROM {probe}))
             AS n_not_in_with_nulls,
-          (SELECT CAST(COUNT(*) AS BIGINT) FROM orders_nin
-           WHERE o_custkey NOT IN (SELECT k FROM probe_nin
+          (SELECT CAST(COUNT(*) AS BIGINT) FROM {orders}
+           WHERE o_custkey NOT IN (SELECT k FROM {probe}
                                    WHERE k IS NOT NULL))
             AS n_not_in_nulls_filtered,
-          (SELECT CAST(COUNT(*) AS BIGINT) FROM orders_nin o
-           WHERE NOT EXISTS (SELECT 1 FROM probe_nin p
+          (SELECT CAST(COUNT(*) AS BIGINT) FROM {orders} o
+           WHERE NOT EXISTS (SELECT 1 FROM {probe} p
                              WHERE p.k = o.o_custkey))
             AS n_not_exists
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
+        probe=load_table(spark, sf_dir, "customer").select(
+            F.when(F.col("c_custkey") % 100 == 0, None)
+            .otherwise(F.col("c_custkey"))
+            .alias("k")
+        ),
     )
 
 

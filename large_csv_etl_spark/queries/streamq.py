@@ -55,24 +55,9 @@ def _adaptive_state_partitions(
     code path, no local[32]-only constant. Returns 0 (leave the session
     default untouched) when the source cannot be listed (e.g. an object
     store path — a deployment there sizes via the FileSystem API)."""
-    import os
+    from ..io import _file_versions
 
-    total = 0
-    try:
-        names = os.listdir(source_dir)
-    except OSError:
-        return 0
-    import fnmatch
-
-    for n in names:
-        if glob and not fnmatch.fnmatch(n, glob):
-            continue
-        p = os.path.join(source_dir, n)
-        try:
-            if os.path.isfile(p):
-                total += os.path.getsize(p)
-        except OSError:
-            return 0
+    total = sum(size for _, _, size in _file_versions(source_dir, glob))
     if total <= 0:
         return 0
     return max(1, min(_STATE_PARTITIONS_CAP, -(-total // _STATE_TARGET_BYTES)))
@@ -96,31 +81,53 @@ def _drain(
     stream_df: DataFrame, tag: str, output_mode: str = "complete"
 ) -> DataFrame:
     """``run_bounded`` into a fresh ``stream_<tag>_…`` memory table through
-    a throwaway ``ckpt_<tag>_…`` checkpoint."""
+    a throwaway ``ckpt_<tag>_…`` checkpoint. The table's temp view is
+    dropped before return: the returned DataFrame keeps the sink's rows,
+    and the caller's catalog keeps no name for them."""
     from ..streaming import run_bounded
 
     name = f"stream_{tag}_{uuid.uuid4().hex[:8]}"
-    with _checkpoint(f"ckpt_{tag}_") as ckpt:
-        return run_bounded(stream_df, name, ckpt, output_mode)
+    try:
+        with _checkpoint(f"ckpt_{tag}_") as ckpt:
+            return run_bounded(stream_df, name, ckpt, output_mode)
+    finally:
+        stream_df.sparkSession.catalog.dropTempView(name)
+
+
+def _scoped_session(spark: SparkSession, key: str, value: str) -> SparkSession:
+    """A child of ``spark`` (``newSession``: same SparkContext, own SQL
+    conf and temp views) carrying the caller's modifiable confs with
+    ``key`` set to ``value``. Nothing set here reaches the caller."""
+    child = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            child.conf.set(k, v)
+    child.conf.set(key, value)
+    return child
 
 
 def _q(name, oracle=None, adaptive_state=True):
-    """Register a streaming query; the registered callable runs with
-    ``spark.sql.shuffle.partitions`` scoped to the adaptive state-store
-    count for the duration of the call (stream construction + drain),
-    restoring the caller's value afterwards. The drained sink tables the
-    queries return are partition-count independent (verified by the
-    standing local[7] regime probe and the per-query oracle mimics), so
-    only the state-commit overhead changes.
+    """Register a streaming query; the registered callable runs in a
+    child session (``_scoped_session``) whose
+    ``spark.sql.shuffle.partitions`` is the adaptive state-store count
+    while the stream is built and drained, and the caller's count again
+    once the call returns, so the returned DataFrame's batch tier plans
+    as on the caller's session. The caller's session is never written.
+    The drained sink tables the queries return are partition-count
+    independent (verified by the standing local[7] regime probe and the
+    per-query oracle mimics), so only the state-commit overhead changes.
+    A StreamingQueryListener added to the caller's ``spark.streams`` does
+    not see these drains: each session's listener bus forwards only the
+    queries started in that session.
 
-    ``adaptive_state=False`` opts a query out and keeps the session's
-    partitioning: correct for CUSTOM-Python-state operators
-    (applyInPandasWithState / transformWithState), whose per-group
-    PYTHON work is serialized by fewer partitions — the opposite
-    trade from the built-in stateful operators, whose cost is the
-    per-partition store commit (measured: streaming_user_totals
-    regressed 4.0 -> 6.2 s under 1 partition while every built-in
-    stateful entry improved 1.4-2.7x)."""
+    ``adaptive_state=False`` opts a query out: it runs on the caller's
+    session with the session's partitioning. That is correct for
+    CUSTOM-Python-state operators (applyInPandasWithState /
+    transformWithState), whose per-group PYTHON work is serialized by
+    fewer partitions — the opposite trade from the built-in stateful
+    operators, whose cost is the per-partition store commit (measured:
+    streaming_user_totals regressed 4.0 -> 6.2 s under 1 partition while
+    every built-in stateful entry improved 1.4-2.7x)."""
 
     def deco(fn):
         import functools
@@ -131,15 +138,12 @@ def _q(name, oracle=None, adaptive_state=True):
             if n <= 0:
                 return fn(spark, sf_dir)
             key = "spark.sql.shuffle.partitions"
-            old = spark.conf.get(key, None)
-            spark.conf.set(key, str(n))
-            try:
-                return fn(spark, sf_dir)
-            finally:
-                if old is not None:
-                    spark.conf.set(key, old)
-                else:
-                    spark.conf.unset(key)
+            child = _scoped_session(spark, key, str(n))
+            out = fn(child, sf_dir)
+            # every drain has terminated: the batch tier over the drained
+            # rows plans with the caller's count
+            child.conf.set(key, spark.conf.get(key))
+            return out
 
         return _register(name, oracle)(wrapped)
 
@@ -1029,18 +1033,20 @@ def streaming_watermark_delay_sweep(
     legs = []
     # If any start/await raises, stop every still-active leg (ADVICE r15
     # #4): an orphaned StreamingQuery would keep running in the shared
-    # session. The checkpoints go once every leg has terminated.
-    with contextlib.ExitStack() as ckpts:
+    # session. The checkpoints and the sinks' temp views go once every
+    # leg has terminated and been read.
+    with contextlib.ExitStack() as scope:
         try:
             for hours in (1, 2, 4):
                 name = f"stream_sweep_{hours}h_{uuid.uuid4().hex[:8]}"
+                scope.callback(spark.catalog.dropTempView, name)
                 q = start_bounded(
                     hourly_tumbling_stream(
                         read_events_stream(spark, sf_dir, glob="events.parquet"),
                         watermark=f"{hours} hours",
                     ),
                     name,
-                    ckpts.enter_context(_checkpoint(f"ckpt_sweep_{hours}h_")),
+                    scope.enter_context(_checkpoint(f"ckpt_sweep_{hours}h_")),
                     output_mode="append",
                 )
                 started.append((hours, name, q))

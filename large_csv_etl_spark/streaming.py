@@ -23,9 +23,11 @@ from .queries.helpers import dsum
 
 # Explicit source schema (streams cannot infer). The events fixture has
 # shipped ``ts`` two ways across driver revisions — int64 TIMESTAMP(NANOS)
-# (readable only via nanosAsLong, then rebuilt to micros) and plain
-# TIMESTAMP(MICROS) without isAdjustedToUTC (read as TIMESTAMP_NTZ) — so
-# the reader probes the static footer and adapts instead of pinning one.
+# (requested as ``long``, then rebuilt to micros) and plain
+# TIMESTAMP(MICROS) without isAdjustedToUTC (footer type TIMESTAMP_NTZ,
+# requested as ``timestamp``: the reader takes the stored micros as the
+# instant, with no timezone shift) — so the reader probes the static
+# footer and adapts instead of pinning one.
 _EVENTS_STREAM_FIELDS = (
     "event_id long, ts {ts_type}, user_id long, event_type string, "
     "value double, props string"
@@ -42,30 +44,24 @@ def read_events_stream(
     ``events.parquet`` inside a mixed-table test-data dir).
 
     The ``ts`` event-time column always comes out as a (micros-precision)
-    timestamp regardless of which physical layout the source files use;
-    watermarks and windows downstream never see the difference. The layout
+    TIMESTAMP regardless of which physical layout the source files use;
+    watermarks (which reject TIMESTAMP_NTZ) and windows downstream never
+    see the difference, and the session conf is never written. The layout
     comes from Spark's schema inference over the static files, run once
     per version of those files (``io.inferred_parquet_schema``) before the
     stream plan is built — file-source schemas are fixed per query, so
     this is the one place the layout decision can live."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = inferred_parquet_schema(spark, source_dir, glob)
-    ts_type = schema["ts"].dataType.simpleString()
-    reader = spark.readStream.schema(
-        _EVENTS_STREAM_FIELDS.format(ts_type="long" if ts_type == "bigint" else ts_type)
+    footer = inferred_parquet_schema(spark, source_dir, glob)["ts"]
+    footer_type = footer.dataType.simpleString()
+    ts_type = {"bigint": "long", "timestamp_ntz": "timestamp"}.get(
+        footer_type, footer_type
     )
+    reader = spark.readStream.schema(_EVENTS_STREAM_FIELDS.format(ts_type=ts_type))
     if glob:
         reader = reader.option("pathGlobFilter", glob)
     df = reader.parquet(source_dir)
-    if ts_type == "bigint":
+    if ts_type == "long":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    elif ts_type == "timestamp_ntz":
-        # Watermarks accept only TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_
-        # TYPE otherwise). Pin the session to UTC so the NTZ->LTZ cast is a
-        # pure reinterpretation (no DST, no wall-clock shift) even on a
-        # vanilla session that never set a timezone.
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 
