@@ -52,9 +52,10 @@ def _adaptive_state_partitions(
     count from the bytes the drain will process (like AQE derives
     partition counts from runtime sizes) gives 1-few partitions on a
     KB-state local drain and thousands on a 100 TB backfill — the same
-    code path, no local[32]-only constant. Returns 0 (leave the session
-    default untouched) when the source cannot be listed (e.g. an object
-    store path — a deployment there sizes via the FileSystem API)."""
+    code path, no local[32]-only constant. Returns 0 (run on the caller's
+    session and its count) when the source cannot be listed (e.g. an
+    object store path — a deployment there sizes via the FileSystem API).
+    The listing is the scan memo's own (``io._file_versions``)."""
     from ..io import _file_versions
 
     total = sum(size for _, _, size in _file_versions(source_dir, glob))
