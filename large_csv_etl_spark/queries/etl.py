@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table, read_transactions_csv, upsert_by_key
 from ..transform import transform
-from .helpers import DEC, dsum, registry, sql_dsum, sql_phash60
+from .helpers import DEC, dsum, local_frame, registry, sql_dsum, sql_phash60
 
 QUERIES, ORACLES, _q = registry()
 
@@ -1825,8 +1825,8 @@ def etl_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         dnull.alias("tx_to"),
     )
     versions = v1.unionAll(wrong).unionAll(fixed).unionAll(clean)
-    probes = spark.createDataFrame(
-        [("1996-01-15",), ("1996-03-01",)], ["t_str"]
+    probes = local_frame(
+        spark, [("1996-01-15",), ("1996-03-01",)], "t_str string"
     ).select(F.col("t_str").cast("date").alias("t"))
     vday = d("1996-06-01")
     return (
@@ -2557,11 +2557,13 @@ def etl_header_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, f in enumerate(sch.fields)
         ]
 
-    v1 = spark.createDataFrame(
+    v1 = local_frame(
+        spark,
         cols(f"{EVOLVE_DIR}/evolve_v1.parquet"),
         "column_name string, type_v1 string, ordinal_v1 long",
     )
-    v2 = spark.createDataFrame(
+    v2 = local_frame(
+        spark,
         cols(f"{EVOLVE_DIR}/evolve_v2.parquet"),
         "column_name string, type_v2 string, ordinal_v2 long",
     )
@@ -3043,7 +3045,8 @@ def etl_column_order_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def side(path, suffix):
         df = spark.read.parquet(path)
-        pos = spark.createDataFrame(
+        pos = local_frame(
+            spark,
             [(n, i + 1) for i, n in enumerate(df.columns)],
             f"column_name string, pos_{suffix} long",
         )

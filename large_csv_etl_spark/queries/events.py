@@ -19,6 +19,7 @@ from ..io import load_table
 from .helpers import (
     DEC,
     dsum,
+    local_frame,
     materialize_reduced,
     registry,
     sql_dsum,
@@ -1686,7 +1687,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if not trows:
         # empty input: no states, no distribution
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "event_type string, stationary_fp bigint, stationary_prob double",
         )
@@ -1703,7 +1705,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         dm = sum(rank[t] for t in state_list if t not in outs_set)
         share = dm // n
         rank = {t: in_mass.get(t, 0) + share for t in state_list}
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(t, rank[t]) for t in state_list], "t string, rank bigint"
     )
     return out.select(

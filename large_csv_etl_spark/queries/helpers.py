@@ -229,6 +229,33 @@ def materialize_reduced(df):
     return df.localCheckpoint(eager=True)
 
 
+def local_frame(spark, rows, ddl: str) -> DataFrame:
+    """The driver-side tuples ``rows`` as a DataFrame typed by the DDL
+    string ``ddl``, held by the driver as a ``LocalRelation``.
+
+    ``spark.createDataFrame(rows, ddl)`` pickles Python rows into an RDD:
+    collecting it runs a Spark job with a Python worker per task, and a
+    join or broadcast over it adds a pickling stage. Built from a
+    ``pyarrow.Table``, the frame is a ``LocalRelation`` instead, which
+    every action reads without a job or a Python worker (with or without
+    ``spark.sql.execution.arrow.pyspark.enabled``). Column types come from
+    ``ddl``, never from the data, so empty ``rows`` or an all-``None``
+    column keep their types; every column is nullable, as with a DDL
+    schema. Only for small, bounded row lists: the driver holds them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 # --- fixed-point total-variation-distance contract ----------------------
 # ONE definition of the determinism-critical TVD snap shared by the drift
 # operators (text_source_token_drift, events_type_drift_daily) on BOTH

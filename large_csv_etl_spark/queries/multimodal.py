@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from ..multimodal import attach_payload, decode_payloads, sample_frames
-from .helpers import registry
+from .helpers import local_frame, registry
 
 QUERIES, ORACLES, _q = registry()
 
@@ -931,9 +931,7 @@ def multimodal_tile_batch_packing(
         F.count("*").cast("bigint").alias("c"),
         F.sum("oversize").cast("bigint").alias("ov"),
     )
-    spine = spark.createDataFrame(
-        [(s,) for s in _PACK_SIZES], "bucket long"
-    )
+    spine = local_frame(spark, [(s,) for s in _PACK_SIZES], "bucket long")
     cnt = (
         spine.join(F.broadcast(g), "bucket", "left")
         .select(

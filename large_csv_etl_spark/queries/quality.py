@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
-from .helpers import registry
+from .helpers import local_frame, registry
 
 QUERIES, ORACLES, _q = registry()
 
@@ -1158,7 +1158,8 @@ def dq_referential_cascade_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.col("n_regionkey") == F.col("r_regionkey"))
         .count()
     )
-    full = spark.createDataFrame(
+    full = local_frame(
+        spark,
         [("lineitem->region (full chain)", n_li, n_li - n_reach)],
         "hop string, n_rows bigint, n_orphans bigint",
     )
@@ -1386,8 +1387,8 @@ def dq_schema_drift_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         (f.name, _spark_type_class(f.dataType.simpleString()))
         for f in spark.read.parquet(f"{_DRIFT_DIR}/drift_v2.parquet").schema
     ]
-    a = spark.createDataFrame(rows_a, ["col", "cls_a"])
-    b = spark.createDataFrame(rows_b, ["col", "cls_b"])
+    a = local_frame(spark, rows_a, "col string, cls_a string")
+    b = local_frame(spark, rows_b, "col string, cls_b string")
     j = a.join(b, "col", "full_outer")
     return j.select(
         F.col("col").alias("col_name"),
@@ -1737,7 +1738,8 @@ def dq_benford_second_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (values < 10 cents excluded — no second digit). Share and deviation
     are one identical IEEE chain per digit over exact counts.
     Prototype-validated bit-identical at sf0.01 and sf0.1 in round 11."""
-    ref = spark.createDataFrame(
+    ref = local_frame(
+        spark,
         [(d, fp) for d, fp in enumerate(BENFORD2_FP)], "digit long, ref_fp long"
     )
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..io import load_table
 from .helpers import (
     hash_bucket as _hash_bucket,
+    local_frame,
     materialize_reduced,
     micro6,
     phash60,
@@ -1611,8 +1612,8 @@ def sample_greedy_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stay selectable (mirrors the oracle)
         pool = all_docs
         if selected:
-            sel_df = pool.sparkSession.createDataFrame(
-                [(d,) for d in selected], "doc_id long"
+            sel_df = local_frame(
+                pool.sparkSession, [(d,) for d in selected], "doc_id long"
             )
             pool = pool.join(F.broadcast(sel_df), "doc_id", "left_anti")
         g = pool.join(gains, "doc_id", "left").select(

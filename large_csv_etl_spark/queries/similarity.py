@@ -18,6 +18,7 @@ from .helpers import (
     centroid_arrays,
     centroid_means,
     fp_sum,
+    local_frame,
     materialize_reduced,
     micro6,
     phash60,
@@ -168,6 +169,45 @@ def _hubness_panel(emb_n: DataFrame, name: str) -> list:
             f"to be unique"
         )
     return qrows
+
+
+def _hubness_topk(emb_n: DataFrame, name: str, k: int) -> list:
+    """The neighbor ``vec_id`` of every (panel query, rank <= k) pair
+    under the 6dp cosine / vec_id tie-break, collected to the driver.
+    The panel holds at most HUBNESS_PANEL queries, so at most
+    HUBNESS_PANEL * k rows exist; that is enforced, not assumed: one row
+    past the bound is collected at most, and its presence aborts the
+    query."""
+    # the 200-query panel is the graded bound — collect it once (bounded
+    # metadata) and score all pairs in one vectorized Arrow pass instead
+    # of the interpreted crossJoin fold (guide §4.2; bit-identity argued
+    # on _cosine_scores_arrow); the kernel drops self-pairs and keeps a
+    # superset of each top-k
+    qrows = _hubness_panel(emb_n, name)
+    scored = _cosine_scores_arrow(emb_n, qrows, top_k=k).select(
+        "q_id", "vec_id", F.round(F.col("cos_sim"), 6).alias("cos_sim")
+    )
+    ranked = scored.withColumn(
+        "rn",
+        F.row_number().over(
+            Window.partitionBy("q_id").orderBy(
+                F.col("cos_sim").desc(), "vec_id"
+            )
+        ),
+    )
+    bound = HUBNESS_PANEL * k
+    rows = (
+        ranked.filter(F.col("rn") <= k)
+        .select("vec_id")
+        .limit(bound + 1)
+        .collect()
+    )
+    if len(rows) > bound:
+        raise ValueError(
+            f"{name}: more than {bound} top-{k} rows; the driver-side "
+            f"neighbor lists are bounded by the {HUBNESS_PANEL}-query panel"
+        )
+    return [r["vec_id"] for r in rows]
 
 
 @_q(
@@ -374,7 +414,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     chain is one lazy plan (centroid table is a literal broadcast)."""
     emb = load_table(spark, sf_dir, "embeddings")
     assigned, centroids = ivf_assignments(emb)
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(centroids)],
         "list_id int, centroid array<double>",
     )
@@ -924,7 +965,8 @@ def sim_lsh_portable_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange carries 16 BIGINT dots per vector, not the x64 expansion."""
     emb = load_table(spark, sf_dir, "embeddings")
     planes = _portable_plane_weights()
-    pl = spark.createDataFrame(
+    pl = local_frame(
+        spark,
         [(p, d, w) for p, ws in enumerate(planes) for d, w in enumerate(ws)],
         "p int, d int, w long",
     )
@@ -2729,9 +2771,10 @@ def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-5 (the established 6dp cosine / vec_id tie-break contract, so
     both engines build the identical kNN lists) and report the ten
     biggest hubs with their occupancy share on the 1e6 lattice. Work:
-    one broadcast score pass (|panel| x |corpus|), one per-query top-5
-    window, one hash agg on the neighbor id — the same bounded shapes
-    as the kNN label eval."""
+    one Arrow score pass (|panel| x |corpus|) and one per-query top-5
+    window; the at most 200 x 5 top-5 rows are collected and counted,
+    ranked and cut to ten on the driver."""
+    from collections import Counter
 
     emb = load_table(spark, sf_dir, "embeddings")
     # precompute each norm ONCE (the fold is the same IEEE value the
@@ -2743,35 +2786,15 @@ def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
     )
     emb_n = materialize_reduced(emb_n)
-    # same vectorized Arrow score pass as sim_hubness_kocc (guide §4.2;
-    # bit-identity argued on _cosine_scores_arrow) — the 200-vector
-    # panel is the graded bound, collected as metadata
-    qrows = _hubness_panel(emb_n, "sim_hubness_audit")
-    # the kernel drops self-pairs and keeps a superset of each top-5
-    scored = _cosine_scores_arrow(emb_n, qrows, top_k=5).select(
-        "q_id", "vec_id", F.round(F.col("cos_sim"), 6).alias("cos_sim")
-    )
-    ranked = scored.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("q_id").orderBy(
-                F.col("cos_sim").desc(), F.col("vec_id")
-            )
-        ),
-    ).filter(F.col("rn") <= 5)
-    kocc = ranked.groupBy("vec_id").agg(
-        F.count("*").cast("bigint").alias("k_occurrence")
-    )
-    return (
-        kocc.select(
-            "vec_id",
-            "k_occurrence",
-            F.expr(
-                "CAST((1000000 * k_occurrence) div (200 * 5) AS BIGINT)"
-            ).alias("share_fp"),
-        )
-        .orderBy(F.col("k_occurrence").desc(), "vec_id")
-        .limit(10)
+    # at most 200 x 5 neighbor rows: k-occurrence, the oracle's integer
+    # share (non-negative, so Python // is Spark's div) and its order
+    # are finished on the driver
+    kocc = Counter(_hubness_topk(emb_n, "sim_hubness_audit", 5))
+    top = sorted(kocc.items(), key=lambda vc: (-vc[1], vc[0]))[:10]
+    return local_frame(
+        spark,
+        [(v, c, (1000000 * c) // (200 * 5)) for v, c in top],
+        "vec_id bigint, k_occurrence bigint, share_fp bigint",
     )
 
 
@@ -3061,7 +3084,7 @@ def sim_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         micro6("embedding").alias("x6"),
     )
     t = materialize_reduced(t)
-    signs = spark.createDataFrame(_jl_signs(), "p int, d int, s long")
+    signs = local_frame(spark, _jl_signs(), "p int, d int, s long")
     e = t.select("vec_id", F.posexplode("x6").alias("d", "ef"))
     proj = (
         e.join(F.broadcast(signs), "d")
@@ -3264,9 +3287,7 @@ def sim_nprobe_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 10)
         .select("vec_id")
     )
-    sweep = spark.createDataFrame(
-        [(n,) for n in NPROBE_SWEEP], "nprobe long"
-    )
+    sweep = local_frame(spark, [(n,) for n in NPROBE_SWEEP], "nprobe long")
     cand = (
         sweep.join(F.broadcast(qd), F.col("cell_rank") <= F.col("nprobe"))
         .join(assigned, "clabel")
@@ -4303,56 +4324,32 @@ def sim_hubness_kocc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar hubness measure (positive skew = hubby space;
     ROADMAP_r14 #32 — the audit entry shows the ten biggest hubs,
     this shows the whole shape the skew summarizes). Same 6dp cosine /
-    vec_id tie-break contract. The histogram is bounded (k_occ <= 200,
-    the panel size, so at most 200 nonzero rows), so it is collected
-    and finished on the driver: the zero mass comes from one count of
-    the corpus, the moments are the oracle's exact BIGINT sums (cubes
-    < 2^63 at any corpus size) and the skew is its fixed double chain
-    with a sigma^2 > 0 guard (m2 * sqrt(m2), no fractional pow),
-    evaluated in the same order in Python."""
+    vec_id tie-break contract. The top-10 lists are bounded (at most
+    200 x 10 rows), so they are collected and the histogram is finished
+    on the driver: the zero mass comes from the corpus count observed on
+    the checkpoint job, the moments are the oracle's exact BIGINT sums
+    (cubes < 2^63 at any corpus size) and the skew is its fixed double
+    chain with a sigma^2 > 0 guard (m2 * sqrt(m2), no fractional pow),
+    evaluated in the same order in Python. Four Spark jobs: the
+    checkpoint, the panel collect, and the score-and-rank collect (one
+    shuffle stage, one result stage); the result is a driver-held
+    local frame."""
+    from collections import Counter
+
+    from pyspark.sql import Observation
 
     emb = load_table(spark, sf_dir, "embeddings")
+    # the corpus count rides the checkpoint job as an observed metric;
+    # it counts the whole corpus because that eager checkpoint is the
+    # first action on the frame and scans all of it
+    corpus = Observation()
     emb_n = emb.select(
         "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
-    )
+    ).observe(corpus, F.count(F.lit(1)).alias("n"))
     emb_n = materialize_reduced(emb_n)
-    # the 200-query panel is the graded bound — collect it once (bounded
-    # metadata) and score all pairs in one vectorized Arrow pass instead
-    # of the interpreted crossJoin fold (guide §4.2; bit-identity argued
-    # on _cosine_scores_arrow)
-    qrows = _hubness_panel(emb_n, "sim_hubness_kocc")
-    # the kernel drops self-pairs and keeps a superset of each top-10
-    scored = _cosine_scores_arrow(emb_n, qrows, top_k=10).select(
-        "q_id", "vec_id", F.round(F.col("cos_sim"), 6).alias("cos_sim")
-    )
-    ranked = scored.withColumn(
-        "rn",
-        F.row_number().over(
-            Window.partitionBy("q_id").orderBy(
-                F.col("cos_sim").desc(), "vec_id"
-            )
-        ),
-    )
-    kocc = (
-        ranked.filter(F.col("rn") <= 10)
-        .groupBy("vec_id")
-        .agg(F.count("*").cast("bigint").alias("k_occ"))
-    )
-    # k_occ <= |panel|, so the histogram has at most HUBNESS_PANEL
-    # nonzero rows; one row past that bound aborts the query
-    nz = (
-        kocc.groupBy("k_occ")
-        .agg(F.count("*").cast("bigint").alias("n_vectors"))
-        .limit(HUBNESS_PANEL + 1)
-        .collect()
-    )
-    if len(nz) > HUBNESS_PANEL:
-        raise ValueError(
-            f"sim_hubness_kocc: more than {HUBNESS_PANEL} distinct k_occ "
-            f"values; the driver-side histogram is bounded by the panel"
-        )
-    hist = [(r["k_occ"], r["n_vectors"]) for r in nz]
-    hist.append((0, emb_n.count() - sum(c for _, c in hist)))
+    kocc = Counter(_hubness_topk(emb_n, "sim_hubness_kocc", 10))
+    hist = sorted(Counter(kocc.values()).items())
+    hist.append((0, corpus.get["n"] - len(kocc)))
     hist = [(k, c) for k, c in hist if c > 0]
     # the oracle's BIGINT moment sums, then its double chain in the same
     # operation order (int -> double and sqrt are correctly rounded in
@@ -4372,7 +4369,8 @@ def sim_hubness_kocc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if m2 > 0:
             skew = m3 / (m2 * math.sqrt(m2))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(k, c, skew) for k, c in hist],
         "k_occ bigint, n_vectors bigint, kocc_skewness double",
     )
@@ -4908,7 +4906,7 @@ def sim_ivf_list_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.row_number().over(w).alias("rn"),
         )
     )
-    np_spine = spark.createDataFrame([(1,), (4,)], "nprobe long")
+    np_spine = local_frame(spark, [(1,), (4,)], "nprobe long")
     costs = (
         F.broadcast(np_spine)
         .join(ranked, F.col("rn") <= F.col("nprobe"))

@@ -19,7 +19,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .helpers import materialize_reduced, registry
+from .helpers import local_frame, materialize_reduced, registry
 
 QUERIES, ORACLES, _register = registry()
 
@@ -599,6 +599,7 @@ def streaming_leftouter_interval_join(
     the static table — exactly how the watermark-lateness entries scope
     their graded region. Matched rows emit un-gated; the same cutoff
     applies to both sides so the compared sets agree."""
+    from ..io import load_table
     from ..streaming import click_purchase_leftouter_stream, read_events_stream
 
     drained = _drain(
@@ -608,7 +609,7 @@ def streaming_leftouter_interval_join(
         "louter",
         output_mode="append",
     )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     ts = F.col("ts").cast("timestamp")
     c_max = (
         ev.filter(F.col("event_type") == "click")
@@ -681,8 +682,8 @@ def streaming_update_mode_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # repartition(1) guarantees a footer-bearing part file even for the
         # zero-row seed (an empty 0-partition write leaves only _SUCCESS and
         # the read-back cannot infer a schema)
-        spark.createDataFrame(
-            [], "user_id bigint, n_events bigint"
+        local_frame(
+            spark, [], "user_id bigint, n_events bigint"
         ).repartition(1).write.mode("overwrite").parquet(sink_dir)
         counts = (
             read_events_stream(spark, sf_dir, glob="events.parquet")
@@ -841,6 +842,7 @@ def streaming_fullouter_interval_join(
     strictly below that cutoff, computed deterministically from the
     static table. Same 2 h watermark / 1 h band as the left-outer
     twin; state stays bounded by delay + band at any scale."""
+    from ..io import load_table
     from ..streaming import click_purchase_fullouter_stream, read_events_stream
 
     drained = _drain(
@@ -850,7 +852,7 @@ def streaming_fullouter_interval_join(
         "fouter",
         output_mode="append",
     )
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = load_table(spark, sf_dir, "events")
     ts = F.col("ts").cast("timestamp")
     c_max = (
         ev.filter(F.col("event_type") == "click")
@@ -916,8 +918,10 @@ def streaming_update_mode_user_totals(
 
     with _checkpoint("upd_totals_") as root:
         sink_dir = root + "/capture"
-        spark.createDataFrame(
-            [], "user_id bigint, n_events bigint, total_cents bigint,"
+        local_frame(
+            spark,
+            [],
+            "user_id bigint, n_events bigint, total_cents bigint,"
             " batch_id bigint"
         ).repartition(1).write.mode("overwrite").parquet(sink_dir)
         totals = (

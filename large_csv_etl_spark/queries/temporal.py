@@ -341,7 +341,7 @@ def temporal_nearest_event_to_order(spark: SparkSession, sf_dir: str) -> DataFra
     """
     WITH ev AS (SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events),
     flagged AS (
-      SELECT user_id, ts,
+      SELECT user_id, ts, event_id,
              CASE WHEN ts - LAG(ts) OVER w <= INTERVAL 30 MINUTE THEN 0
                   ELSE 1 END AS new_session
       FROM ev
@@ -349,7 +349,7 @@ def temporal_nearest_event_to_order(spark: SparkSession, sf_dir: str) -> DataFra
     ), sess AS (
       SELECT user_id,
              CAST(SUM(new_session) OVER (
-               PARTITION BY user_id ORDER BY ts
+               PARTITION BY user_id ORDER BY ts, event_id
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
                AS session_id,
              ts
@@ -395,13 +395,12 @@ def temporal_business_hours_overlap(spark: SparkSession, sf_dir: str) -> DataFra
     final rollup."""
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cum = Window.partitionBy("user_id").orderBy("ts").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
+    cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     ts = F.col("ts").cast("timestamp")
     flagged = ev.select(
         "user_id",
         ts.alias("ts"),
+        "event_id",
         F.when(
             ts - F.lag(ts).over(w) <= F.expr("INTERVAL 30 MINUTE"), 0
         )

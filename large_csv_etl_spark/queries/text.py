@@ -23,6 +23,7 @@ from .dedup import STOPWORDS
 from .helpers import (
     davg,
     fp_sum,
+    local_frame,
     materialize_reduced,
     phash60,
     registry,
@@ -2471,7 +2472,8 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         cur = nxt
         if rnd < 3:  # round 3's trailing degree table has no consumer
             deg = materialize_reduced(undirected_degrees(cur))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "round bigint, k bigint, n_nodes_kept bigint, "
         "n_edges_kept bigint, n_removed bigint",
@@ -5739,8 +5741,8 @@ def text_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("token")
         .agg(F.min("cum_end").alias("first_cum"))
     )
-    spine = spark.createDataFrame(
-        [(1000,), (4000,), (16000,), (64000,)], "prefix_tokens long"
+    spine = local_frame(
+        spark, [(1000,), (4000,), (16000,), (64000,)], "prefix_tokens long"
     )
     tok_counts = (
         spine.crossJoin(firsts)

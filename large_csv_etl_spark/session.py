@@ -142,8 +142,12 @@ def release_blocks(spark: SparkSession) -> None:
     """
     try:
         jvm_rdds = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jvm_rdds.values()):
-            jrdd.unpersist(True)
+        # by index over a key array: iterating the py4j map ends on a Java
+        # NoSuchElementException, which PySpark converts on every call
+        # (20-30 ms of CPU)
+        keys = jvm_rdds.keySet().toArray()
+        for i in range(len(keys)):
+            jvm_rdds.get(keys[i]).unpersist(True)
         spark.catalog.clearCache()
     except Exception as exc:  # cleanup is best-effort, but never silent:
         # if the py4j private API this leans on ever changes, the round-9

@@ -5,8 +5,9 @@ and the schema memo behind ``load_table``.
   top-k: the callers' window over it must pick exactly the rows it picks
   over the unpruned kernel, ties at the 6-dp boundary, NaN scores, small
   batches and several batches per partition included;
-- ``sim_hubness_kocc`` collects its bounded histogram and computes the
-  moments on the driver, so its result is a local relation;
+- ``sim_hubness_kocc`` and ``sim_hubness_audit`` collect their bounded
+  top-k rows and finish on the driver, so their results are local
+  relations; the collect bound is enforced;
 - ``load_table`` infers a table's schema once per version of its file
   and per inference conf.
 """
@@ -179,34 +180,84 @@ def _jobs_in_group(spark, group, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_hubness_kocc_empty_table_matches_oracle_schema(spark, emb_dir):
+def test_hubness_kocc_runs_at_most_four_jobs(spark, emb_dir):
+    """Checkpoint (with the observed corpus count), panel collect, and
+    the top-10 collect's shuffle and result stages; the result is a
+    local relation that collects without a job."""
+    rng = random.Random(6)
+    d = emb_dir(
+        [(i, [rng.uniform(-1, 1) for _ in range(4)], i % 3) for i in range(40)]
+    )
+    build = all_queries()["sim_hubness_kocc"]
+    build(spark, d)  # the first call also infers the table's schema
+    df, built = _jobs_in_group(spark, "kocc_build", lambda: build(spark, d))
+    rows, collected = _jobs_in_group(spark, "kocc_result", df.collect)
+    assert built <= 4
+    assert collected == 0
+    assert sum(r["n_vectors"] for r in rows) == 40
+    assert sum(r["k_occ"] * r["n_vectors"] for r in rows) == 40 * 10
+
+
+@pytest.mark.parametrize(
+    "name, k", [("sim_hubness_kocc", 10), ("sim_hubness_audit", 5)]
+)
+def test_hubness_topk_bound_is_enforced(spark, emb_dir, monkeypatch, name, k):
+    """A panel larger than HUBNESS_PANEL yields more than HUBNESS_PANEL * k
+    top-k rows; the bounded collect must abort, not return them."""
+    from large_csv_etl_spark.queries import similarity
+
+    rng = random.Random(7)
+    d = emb_dir(
+        [(i, [rng.uniform(-1, 1) for _ in range(4)], 0) for i in range(30)]
+    )
+    real_panel = similarity._hubness_panel
+
+    def panel_of_five(emb_n, _name):
+        # a 5-query panel, then a bound of 2 queries for the top-k collect
+        monkeypatch.setattr(similarity, "HUBNESS_PANEL", 5)
+        qrows = real_panel(emb_n, _name)
+        monkeypatch.setattr(similarity, "HUBNESS_PANEL", 2)
+        return qrows
+
+    monkeypatch.setattr(similarity, "_hubness_panel", panel_of_five)
+    with pytest.raises(ValueError, match=f"more than {2 * k} top-{k} rows"):
+        similarity.QUERIES[name](spark, d)
+
+
+@pytest.mark.parametrize("name", ["sim_hubness_kocc", "sim_hubness_audit"])
+def test_hubness_on_empty_table_finishes_with_oracle_schema(
+    spark, emb_dir, name
+):
+    """On an empty corpus the observed count must still be delivered
+    (``Observation.get`` blocks until it is), and the result is 0 rows in
+    the oracle's types."""
+    import threading
+
     import duckdb
 
     d = emb_dir([])
-    df = all_queries()["sim_hubness_kocc"](spark, d)
-    assert df.collect() == []
+    out = {}
+
+    def run():
+        df = all_queries()[name](spark, d)
+        out["rows"] = df.collect()
+        out["schema"] = df.schema
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(300)
+    assert not t.is_alive(), f"{name} did not finish on an empty table"
+    assert out["rows"] == []
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{d}/embeddings.parquet')"
     )
-    tbl = con.execute(all_oracles()["sim_hubness_kocc"]).arrow()
+    tbl = con.execute(all_oracles()[name]).arrow()
     assert tbl.num_rows == 0
     assert [
-        (f.name, drive_driver.spark_canon(f.dataType)) for f in df.schema
+        (f.name, drive_driver.spark_canon(f.dataType)) for f in out["schema"]
     ] == [(f.name, drive_driver.arrow_canon(f.type)) for f in tbl.schema]
-
-
-def test_hubness_kocc_result_collects_in_one_job(spark, emb_dir):
-    rng = random.Random(5)
-    d = emb_dir(
-        [(i, [rng.uniform(-1, 1) for _ in range(4)], i % 3) for i in range(40)]
-    )
-    df = all_queries()["sim_hubness_kocc"](spark, d)
-    rows, jobs = _jobs_in_group(spark, "kocc_collect", df.collect)
-    assert jobs <= 1
-    assert sum(r["n_vectors"] for r in rows) == 40
-    assert sum(r["k_occ"] * r["n_vectors"] for r in rows) == 40 * 10
 
 
 def _write(path, cols):

@@ -479,3 +479,42 @@ def test_parquet_sink_entries_remove_their_temp_dir(spark, name, prefix):
     want = con.sql(all_oracles()[name])
     got = [tuple(r) for r in df.select(*want.columns).collect()]
     assert sorted(got) == sorted(want.fetchall())
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["streaming_leftouter_interval_join", "streaming_fullouter_interval_join"],
+)
+def test_outer_interval_joins_match_oracle_on_nanos_events(
+    spark, tmp_path, name
+):
+    """The outer interval joins take their graded cutoff from the static
+    ``events`` table; on the TIMESTAMP(NANOS) layout that read must go
+    through ``load_table`` (a plain parquet read fails inference there, or
+    reads ``ts`` as int64 nanos)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from large_csv_etl_spark.queries import all_oracles, all_queries
+
+    tbl = pq.read_table(f"{SF_DIR}/events.parquet")
+    i = tbl.schema.get_field_index("ts")
+    ns = tbl.column(i).cast(pa.timestamp("ns"))
+    pq.write_table(
+        tbl.set_column(i, pa.field("ts", pa.timestamp("ns")), ns),
+        tmp_path / "events.parquet",
+        version="2.6",
+    )
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type == (
+        pa.timestamp("ns")
+    )
+    df = all_queries()[name](spark, str(tmp_path))
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    want = con.sql(all_oracles()[name])
+    got = [tuple(r) for r in df.select(*want.columns).collect()]
+    assert len(got) > 0
+    assert sorted(got, key=repr) == sorted(want.fetchall(), key=repr)

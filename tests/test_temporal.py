@@ -130,3 +130,46 @@ def test_band_join_bucket_replication_never_double_counts(spark, tmp_path):
         for r in range_join_follower_events(spark, sf).collect()
     }
     assert got == {1: 2, 2: 1}
+
+
+def test_business_hours_sessions_order_ties_by_event_id(spark, tmp_path):
+    """Two events at one instant 31 minutes after the user's first event:
+    the lag orders them (ts, event_id), so event 2 opens the second
+    session and event 3 continues it. The running sum must take the same
+    order, or event 3 can be counted into the first session, which would
+    then span 31 minutes (all of it business hours). Rows are written
+    with event 3 before event 2; engine and oracle must agree on the
+    answer known by construction."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from large_csv_etl_spark.queries import all_oracles, all_queries
+
+    t0 = TS(2024, 1, 1, 10, 0)
+    t1 = TS(2024, 1, 1, 10, 31)
+    ids, ts = [1, 3, 2], [t0, t1, t1]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(ids, pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("us")),
+                "user_id": pa.array([7, 7, 7], pa.int64()),
+                "event_type": pa.array(["click"] * 3),
+                "value": pa.array([1.0] * 3),
+                "props": pa.array(["{}"] * 3),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    name = "temporal_business_hours_overlap"
+    want = [(7, 2, 0, 0)]
+    cols = ["user_id", "n_sessions", "business_us", "longest_session_us"]
+    got = all_queries()[name](spark, str(tmp_path)).select(*cols).collect()
+    assert [tuple(r) for r in got] == want
+    con = duckdb.connect()
+    con.sql(
+        f"CREATE VIEW events AS SELECT * FROM '{tmp_path}/events.parquet'"
+    )
+    oracle = con.sql(all_oracles()[name])
+    assert oracle.select(*cols).fetchall() == want
